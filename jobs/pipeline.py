@@ -39,14 +39,7 @@ def main() -> int:
                     help="0 = no pre-parse shuffle (default; scan splits are balanced); "
                          ">0 only for skew-laid-out sources")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--layout", choices=["multiwrite", "onepass"], default="multiwrite",
-                    help="multiwrite = one parquet dir per sink (default); onepass = single "
-                         "partitionBy(signal_type) write, sinks as partition-pruned views — "
-                         "the no-persist 100 TB fan-out (see SCALE.md)")
     args = ap.parse_args()
-    if args.layout == "onepass" and args.salt_buckets:
-        # validate BEFORE building a Spark session / synthesizing input
-        ap.error("--salt-buckets applies only to --layout multiwrite")
 
     from pyspark import SparkConf
     from pyspark.sql import SparkSession
@@ -71,22 +64,16 @@ def main() -> int:
 
         input_path = load_or_synth_transcripts(60_000, seed=42)
 
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline, run_pipeline_onepass
+    from otel_kafka_pg_spark.plans.pipeline import run_pipeline
 
-    if args.layout == "onepass":
-        manifest = run_pipeline_onepass(
-            spark, input_path, args.output, parse_impl=args.parse_impl,
-            resume=not args.no_resume,
-        )
-    else:
-        manifest = run_pipeline(
-            spark,
-            input_path,
-            args.output,
-            parse_impl=args.parse_impl,
-            salt_buckets=args.salt_buckets,
-            resume=not args.no_resume,
-        )
+    manifest = run_pipeline(
+        spark,
+        input_path,
+        args.output,
+        parse_impl=args.parse_impl,
+        salt_buckets=args.salt_buckets,
+        resume=not args.no_resume,
+    )
     summary = {
         "input": input_path,
         "output": args.output,

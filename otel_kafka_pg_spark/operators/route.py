@@ -143,11 +143,6 @@ def to_metrics(df: DataFrame) -> DataFrame:
 
 SINK_BUILDERS = {"traces": to_traces, "logs": to_logs, "metrics": to_metrics}
 
-# authoritative sink-name → signal_type value (the classify_signal output
-# each builder filters on) — look this up instead of deriving one from the
-# other by string surgery
-SINK_SIGNAL = {"traces": "trace", "logs": "log", "metrics": "metric"}
-
 
 def sink_counts(routed: DataFrame) -> DataFrame:
     """Per-sink aggregate counts over (conv_id, role, tool, hour bucket) —

@@ -113,19 +113,6 @@ def parquet_file_lineage(dest: str) -> list[dict]:
     ]
 
 
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-Spark-partition row counts — the lineage record each partition
-    emits (north-rule requirement; analog of the reference's per-flush count
-    log lines consumer.go:302,316)."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .orderBy("partition_id")
-        .collect()
-    )
-    return [{"partition_id": int(r["partition_id"]), "rows": int(r["rows"])} for r in rows]
-
-
 def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, MANIFEST_NAME)
 

@@ -21,8 +21,9 @@ Scale notes (the plan that must survive 1000 executors / 100 TB):
   (salt_buckets>0) exists for skew-LAID-OUT sources — see build_routed.
 - the enrich join is a broadcast hash join by construction — no shuffle of
   the fact side, no skew exposure.
-- fan-out materializes the routed frame once (persist) and scans it three
-  times; at cluster scale the persist level spills to disk gracefully.
+- fan-out materializes the routed frame once (persist, MEMORY_AND_DISK_DESER:
+  blocks that do not fit in executor memory spill to local disk) and
+  scans it four times; a single-sink resume skips the cache.
 - writes are per-sink parquet (Iceberg-ready: swap the writer for
   ``writeTo(...).append()`` — the manifest/resume logic is sink-agnostic).
 """
@@ -118,28 +119,21 @@ def run_pipeline(
     salt_buckets: int = 0,
     resume: bool = True,
     fail_after_sink: str | None = None,
-    persist_routed: bool = True,
 ) -> dict:
     """Run the pipeline end-to-end with manifest checkpointing.
 
     Returns the manifest. With ``resume=True``, sinks already completed for
     the same input fingerprint are skipped (idempotent resume of partially
     completed routes).
-
-    ``persist_routed``: cache the routed frame between the three sink scans
-    (right at sandbox scale, where the whole frame fits in memory). At
-    100 TB the cache would exceed executor storage — pass False and each
-    sink recomputes its narrow projection instead (see SCALE.md); results
-    are identical either way (asserted in tests).
     """
     fp = input_fingerprint(input_path)
     fp += "|lookup:" + _lookup_fingerprint(lookup if lookup is not None else service_lookup_pandas())
     manifest = load_manifest(out_dir) if resume else {"input_fingerprint": None, "sinks": {}}
-    # a onepass-layout manifest over the same out_dir marks the SAME sinks
-    # "complete" but never wrote the per-sink directories this layout
-    # produces — treat it like a fingerprint mismatch (the mirror of the
-    # layout check run_pipeline_onepass performs), otherwise a multiwrite
-    # resume over a onepass result returns success without writing anything
+    # older versions could leave a onepass-layout manifest (one
+    # partitionBy(signal_type) write) that marks the SAME sinks "complete"
+    # but never wrote the per-sink directories — treat it like a
+    # fingerprint mismatch, otherwise a resume over it returns success
+    # without writing anything
     if manifest.get("input_fingerprint") != fp or manifest.get("layout") == "onepass":
         manifest = {"input_fingerprint": fp, "sinks": {}}
 
@@ -155,8 +149,8 @@ def run_pipeline(
     routed = build_routed(spark, transcripts, lookup, parse_impl, salt_buckets)
     # a cache only pays for itself when more than one sink will scan it —
     # a single-sink resume scans the frame exactly once
-    persist_routed = persist_routed and len(pending) > 1
-    if persist_routed:
+    cached = len(pending) > 1
+    if cached:
         routed = routed.persist()
     try:
         t0 = time.monotonic()
@@ -203,96 +197,7 @@ def run_pipeline(
             manifest.pop("turns_per_sec", None)
         save_manifest(out_dir, manifest)
     finally:
-        if persist_routed:
+        if cached:
             routed.unpersist()
     return manifest
 
-
-def run_pipeline_onepass(
-    spark: SparkSession,
-    input_path: str,
-    out_dir: str,
-    lookup: DataFrame | None = None,
-    parse_impl: str = "native",
-    resume: bool = True,
-) -> dict:
-    """The 100 TB routing alternative documented in SCALE.md, implemented:
-    ONE write of the routed superset frame, hive-partitioned by
-    ``signal_type``, instead of three filtered sink writes over a persisted
-    (or thrice-recomputed) frame.
-
-    - input is scanned and transformed exactly once; total write volume is
-      identical to the three-sink form (the sinks partition the data), but
-      no persist memory is needed and no recompute happens;
-    - each sink is then a VIEW over its partition directory: the same
-      SINK_BUILDERS run against the read-back table, where Catalyst prunes
-      the ``signal_type=<x>`` partition (metadata-only — asserted in
-      tests) and column pruning keeps the per-sink projection narrow;
-    - per-sink rows/content-hash for the manifest come from those pruned
-      scans of the WRITTEN data — the summary describes what is durably on
-      disk, the property resume relies on.
-
-    Row-set parity with ``run_pipeline`` is asserted in
-    tests/test_pipeline_parity.py.
-
-    Resume granularity is coarser than the multiwrite path by design: the
-    routed dataset is ONE write, so there is no per-sink partial resume —
-    a completed manifest for the same input fingerprint skips the whole
-    run; anything less than complete rewrites everything.
-    """
-    from ..operators.route import SINK_SIGNAL
-    from .manifest import content_hash
-
-    fp = input_fingerprint(input_path)
-    fp += "|lookup:" + _lookup_fingerprint(lookup if lookup is not None else service_lookup_pandas())
-    if resume:  # resume=False forces a full rewrite even over a complete manifest
-        existing = load_manifest(out_dir)
-        if existing.get("input_fingerprint") == fp and existing.get("layout") == "onepass" and all(
-            existing["sinks"].get(s, {}).get("status") == "complete"
-            for s in (*SINK_BUILDERS, "sink_counts")
-        ):
-            return existing
-
-    routed_dest = os.path.join(out_dir, "routed")
-    t0 = time.monotonic()
-    routed = build_routed(spark, spark.read.parquet(input_path), lookup, parse_impl)
-    # write only the union of sink-consumed columns: no sink reads the raw
-    # text (message was derived at parse), the resource_attrs map (the
-    # rendered attributes JSON is precomputed by with_attributes), or
-    # turn_seq — dropping them keeps the one write's volume at the
-    # three-sink form's level instead of duplicating the heaviest column
-    routed = routed.drop("text", "resource_attrs", "turn_seq")
-    routed.write.mode("overwrite").partitionBy("signal_type").parquet(routed_dest)
-
-    back = spark.read.parquet(routed_dest)
-    manifest = {"input_fingerprint": fp, "sinks": {}, "layout": "onepass"}
-    for sink_name, builder in SINK_BUILDERS.items():
-        rows, chash = content_hash(builder(back))
-        manifest["sinks"][sink_name] = {
-            "status": "complete",
-            "rows": rows,
-            "content_hash": chash,
-            "path": routed_dest,
-            "partition": f"signal_type={SINK_SIGNAL[sink_name]}",
-        }
-    counts_dest = os.path.join(out_dir, "sink_counts")
-    rows, chash, lineage = write_with_summary(sink_counts(back), counts_dest)
-    manifest["sinks"]["sink_counts"] = {
-        "status": "complete",
-        "rows": rows,
-        "content_hash": chash,
-        "path": counts_dest,
-        "lineage": lineage,
-    }
-    # manifest symmetry with run_pipeline: routing is exclusive+exhaustive,
-    # so input rows = sum of the three sink partitions, and this layout has
-    # no partial resume — every complete manifest describes one full run
-    input_rows = sum(manifest["sinks"][s]["rows"] for s in SINK_BUILDERS)
-    for s in manifest["sinks"].values():
-        s["input_rows"] = input_rows
-    manifest["elapsed_sec"] = time.monotonic() - t0
-    manifest["turns_per_sec"] = (
-        input_rows / manifest["elapsed_sec"] if manifest["elapsed_sec"] else None
-    )
-    save_manifest(out_dir, manifest)
-    return manifest

@@ -68,22 +68,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = _pkg_root + (os.pathsep + _pp if _pp else "")
     n = cpus or DEFAULT_CPUS
     builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # the reference's attr-merge is last-write-wins (processor.go:116-119);
-        # map_concat must behave the same instead of erroring on dup keys
-        # (belt-and-braces only — the merge is expression-level correct
-        # under any policy since round 3)
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        # zstd: equal write speed, 40% smaller files (see _tuned)
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        _tuned(SparkSession.builder.master(f"local[{n}]").appName(app_name), shuffle_partitions or n)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
     )

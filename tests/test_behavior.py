@@ -111,10 +111,10 @@ def test_approx_distinct_error_bound(spark):
     on the sf0.01 events table."""
     import os
 
-    from otel_kafka_pg_spark.queries import EXTRA_REGISTRY
+    from otel_kafka_pg_spark.queries import REGISTRY
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECTNESS", "/root/testdata/sf0.01")
-    fn, sql = EXTRA_REGISTRY["cd1_approx_distinct"]
+    fn, sql = REGISTRY["cd1_approx_distinct"]
     assert sql is None  # rows-only by design, never silently "oracled"
     for r in fn(spark, sf_dir).collect():
         assert abs(r["approx_users"] - r["exact_users"]) <= 0.05 * r["exact_users"], r

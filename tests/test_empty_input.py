@@ -20,12 +20,10 @@ import os
 
 import pytest
 
-from otel_kafka_pg_spark.queries import EXTRA_REGISTRY, REGISTRY
+from otel_kafka_pg_spark.queries import REGISTRY
 from otel_kafka_pg_spark.sources.tables import TESTDATA_TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECTNESS", "/root/testdata/sf0.01")
-
-_ALL = {**REGISTRY, **EXTRA_REGISTRY}
 
 
 def _reads_sf_tables(fn) -> bool:
@@ -36,7 +34,7 @@ def _reads_sf_tables(fn) -> bool:
     return "_t(" in inspect.getsource(fn)
 
 
-CASES = [(n, fn) for n, (fn, _) in _ALL.items() if _reads_sf_tables(fn)]
+CASES = [(n, fn) for n, (fn, _) in REGISTRY.items() if _reads_sf_tables(fn)]
 
 # every entry the predicate excludes, pinned by name: a future entry that
 # reads sf tables through a helper (no literal "_t(" in its own source)
@@ -59,7 +57,7 @@ _EXPECTED_SYNTH_ONLY = {
 
 
 def test_excluded_entries_are_known_synthetic():
-    excluded = {n for n, (fn, _) in _ALL.items() if not _reads_sf_tables(fn)}
+    excluded = {n for n, (fn, _) in REGISTRY.items() if not _reads_sf_tables(fn)}
     assert excluded == _EXPECTED_SYNTH_ONLY, (
         "gate exclusion set changed — if the new entry truly synthesizes its "
         "own input, add it here; if it reads sf tables via a helper, make "

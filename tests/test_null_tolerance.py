@@ -21,12 +21,10 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from otel_kafka_pg_spark.queries import EXTRA_REGISTRY, REGISTRY
+from otel_kafka_pg_spark.queries import REGISTRY
 from otel_kafka_pg_spark.sources.tables import TESTDATA_TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECTNESS", "/root/testdata/sf0.01")
-
-_ALL = {**REGISTRY, **EXTRA_REGISTRY}
 
 # (table, id column, columns to null-inject) — ids/timestamps stay intact so
 # joins and windows keep their keys; everything else is fair game
@@ -45,7 +43,7 @@ def _targets_llm_tables(fn) -> bool:
     return "_t(" in src and any(t in src for t in _INJECT)
 
 
-CASES = [(n, fn) for n, (fn, _) in _ALL.items() if _targets_llm_tables(fn)]
+CASES = [(n, fn) for n, (fn, _) in REGISTRY.items() if _targets_llm_tables(fn)]
 
 
 @pytest.fixture(scope="module")
@@ -85,7 +83,7 @@ def test_query_vec_null_vec0_falls_back_with_table_dim(spark, tmp_path):
     vector must take the TABLE's dimension, not an assumed 64."""
     import os
 
-    from otel_kafka_pg_spark.queries import EXTRA_REGISTRY, REGISTRY, _query_vec
+    from otel_kafka_pg_spark.queries import _query_vec
 
     rows = [(0, None, "a"), (1, [1.0] * 8, "b"), (2, [0.5] * 8, "c")]
     spark.createDataFrame(
@@ -93,7 +91,7 @@ def test_query_vec_null_vec0_falls_back_with_table_dim(spark, tmp_path):
     ).write.parquet(os.path.join(str(tmp_path), "embeddings.parquet"))
     v = _query_vec(spark, str(tmp_path))
     assert len(v) == 8 and v[0] == 1.0 and sum(v) == 1.0
-    fn, _ = {**REGISTRY, **EXTRA_REGISTRY}["e1_cosine_topk"]
+    fn, _ = REGISTRY["e1_cosine_topk"]
     assert fn(spark, str(tmp_path)).count() == 2  # both non-null vectors ranked
 
 

@@ -11,14 +11,13 @@ import duckdb
 import pandas as pd
 import pytest
 
-from otel_kafka_pg_spark.queries import EXTRA_REGISTRY, REGISTRY
+from otel_kafka_pg_spark.queries import REGISTRY
 from otel_kafka_pg_spark.sources.tables import TESTDATA_TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECTNESS", "/root/testdata/sf0.01")
 
-_ALL = {**REGISTRY, **EXTRA_REGISTRY}  # extras get the SAME gate, locally
-ORACLE_CASES = [(name, fn, sql) for name, (fn, sql) in _ALL.items() if sql is not None]
-ROWS_ONLY_CASES = [(name, fn) for name, (fn, sql) in _ALL.items() if sql is None]
+ORACLE_CASES = [(name, fn, sql) for name, (fn, sql) in REGISTRY.items() if sql is not None]
+ROWS_ONLY_CASES = [(name, fn) for name, (fn, sql) in REGISTRY.items() if sql is None]
 
 
 @pytest.fixture(scope="module")

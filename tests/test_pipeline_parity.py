@@ -98,59 +98,32 @@ def test_resume_skips_completed_sinks(spark, transcripts_path, pipe_out):
     }
 
 
-def test_no_persist_mode_identical_hashes(spark, transcripts_path, pipe_out, tmp_path):
-    # the 100 TB configuration (SCALE.md): no fan-out cache, sinks recompute
-    _, manifest1 = pipe_out
-    out = str(tmp_path / "nopersist")
-    manifest2 = run_pipeline(spark, transcripts_path, out, persist_routed=False)
-    for sink in ("traces", "logs", "metrics", "sink_counts"):
-        assert manifest1["sinks"][sink]["content_hash"] == manifest2["sinks"][sink]["content_hash"], sink
-
-
-def test_onepass_partitioned_routing_matches_multiwrite(spark, transcripts_path, pipe_out, tmp_path):
-    """SCALE.md's one-pass layout: a single partitionBy(signal_type) write
-    + per-sink pruned views must yield exactly the multi-write pipeline's
-    per-sink rows and content hashes, and reading one sink must prune to
-    its partition (not scan the other signal types)."""
-    import os
-
-    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline_onepass
-
-    out = str(tmp_path / "onepass")
-    manifest = run_pipeline_onepass(spark, transcripts_path, out)
-    _, multi = pipe_out  # the standard three-write run over the same input
-
-    for sink in ("traces", "logs", "metrics", "sink_counts"):
-        assert manifest["sinks"][sink]["rows"] == multi["sinks"][sink]["rows"], sink
-        assert manifest["sinks"][sink]["content_hash"] == multi["sinks"][sink]["content_hash"], sink
-
-    # partition pruning: the traces view's scan must carry a NON-EMPTY
-    # PartitionFilters on signal_type ('PartitionFilters: []' prints on
-    # every parquet scan, so presence of the label alone proves nothing)
-    import re
-
-    back = spark.read.parquet(os.path.join(out, "routed"))
-    plan = SINK_BUILDERS["traces"](back)._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "signal_type" in m.group(1) and "trace" in m.group(1), m.group(0) if m else plan[:500]
-
-
 def test_multiwrite_resume_over_onepass_layout_rewrites(spark, transcripts_path, tmp_path):
-    """Layout-mismatch resume symmetry (round-3 advice): a onepass manifest
-    marks the same sink names complete but never wrote the per-sink
-    directories — resuming run_pipeline over it must rewrite everything
-    (and vice versa, which run_pipeline_onepass already guards)."""
+    """Older versions could write a onepass layout: one partitionBy(signal_type)
+    write whose manifest marks the same sink names complete for the same
+    input fingerprint but never wrote the per-sink directories. Resuming
+    run_pipeline over such a manifest must rewrite everything."""
     import os
 
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline_onepass
+    from otel_kafka_pg_spark.plans.manifest import input_fingerprint, save_manifest
+    from otel_kafka_pg_spark.plans.pipeline import _lookup_fingerprint
 
     out = str(tmp_path / "mixed")
-    run_pipeline_onepass(spark, transcripts_path, out)
+    fp = input_fingerprint(transcripts_path) + "|lookup:" + _lookup_fingerprint(service_lookup_pandas())
+    routed_dest = os.path.join(out, "routed")
+    save_manifest(out, {
+        "input_fingerprint": fp,
+        "layout": "onepass",
+        "sinks": {
+            s: {"status": "complete", "rows": 1, "content_hash": 0, "path": routed_dest}
+            for s in ("traces", "logs", "metrics", "sink_counts")
+        },
+    })
     manifest = run_pipeline(spark, transcripts_path, out)  # must NOT no-op
+    assert manifest["input_fingerprint"] == fp
     for sink in ("traces", "logs", "metrics", "sink_counts"):
         dest = os.path.join(out, sink)
-        assert os.path.isdir(dest), f"{sink}: multiwrite resume over onepass wrote nothing"
+        assert os.path.isdir(dest), f"{sink}: resume over a onepass manifest wrote nothing"
         assert manifest["sinks"][sink]["rows"] == spark.read.parquet(dest).count()
     assert manifest.get("layout") != "onepass"
 
@@ -256,22 +229,6 @@ def test_input_fingerprint_normalizes_path_spelling(tmp_path, monkeypatch):
     assert input_fingerprint(str(d) + "/") == absolute
     monkeypatch.chdir(tmp_path)
     assert input_fingerprint("in_norm") == absolute
-
-
-def test_onepass_written_superset_is_slim(spark, transcripts_path, tmp_path):
-    """The onepass routed write must carry only sink-consumed columns —
-    never the raw text, the resource_attrs map, or turn_seq (the heaviest
-    unconsumed columns; dropping them keeps the one write at the
-    three-sink form's volume), and it records the same throughput fields
-    as the multiwrite manifest."""
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline_onepass
-
-    out = str(tmp_path / "op_out")
-    m = run_pipeline_onepass(spark, transcripts_path, out)
-    written = spark.read.parquet(f"{out}/routed")
-    assert not {"text", "resource_attrs", "turn_seq"} & set(written.columns)
-    assert m.get("turns_per_sec") is not None
-    assert all(e.get("input_rows") for e in m["sinks"].values())
 
 
 def test_default_lookup_is_fingerprinted_for_resume(spark, transcripts_path, tmp_path):

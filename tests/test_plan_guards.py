@@ -87,10 +87,10 @@ def test_pipeline_default_has_single_shuffle(spark):
 def test_sink_plans_prune_the_ordering_window(spark):
     """The sinks are order-independent (content-derived IDs), so Catalyst
     must PRUNE the ordering window — and with it the pipeline's only data
-    shuffle — from every un-persisted sink job (this is the no-persist
-    100 TB path's zero-shuffle property). The window still materializes in
-    the default persist path, where its exchange is load-bearing as the
-    cache's re-parallelizer (measured A/B in BENCH/BASELINE.md round 5:
+    shuffle — from every un-persisted sink job (a single-sink resume runs
+    without the cache, so it never shuffles). The window still materializes
+    when run_pipeline caches the routed frame, where its exchange is
+    load-bearing as the cache's re-parallelizer (measured A/B in BENCH/BASELINE.md round 5:
     keeping it beats dropping it AND beats a plain repartition)."""
     from otel_kafka_pg_spark.operators.route import SINK_BUILDERS, sink_counts
     from otel_kafka_pg_spark.plans.pipeline import build_routed

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from otel_kafka_pg_spark.queries import (
     DRIVER_ORDER,
-    EXTRA_REGISTRY,
     REGISTRY,
     all_queries,
     oracle_sql,
@@ -23,35 +22,34 @@ def test_driver_window_is_exactly_the_order():
     q = queries()
     assert len(DRIVER_ORDER) == 50
     assert list(q)[: len(DRIVER_ORDER)] == DRIVER_ORDER
-    assert set(DRIVER_ORDER) == set(REGISTRY)
+    assert set(DRIVER_ORDER) <= set(REGISTRY)
     # flagship + previously-unchecked families lead the window
     assert DRIVER_ORDER[0].startswith("p1")
     assert set(DRIVER_ORDER[:5]) >= {"p1_pipeline_severity_counts", "st1_stream_ingest_counts"}
 
 
-def test_registries_are_disjoint():
-    assert not (set(REGISTRY) & set(EXTRA_REGISTRY))
-    assert set(all_queries()) == set(REGISTRY) | set(EXTRA_REGISTRY)
+def test_driver_contract_is_exactly_driver_order():
+    # both driver surfaces emit DRIVER_ORDER and nothing else, in that order
+    assert list(queries()) == DRIVER_ORDER
+    assert list(oracle_sql()) == [n for n in DRIVER_ORDER if REGISTRY[n][1] is not None]
+
+
+def test_all_queries_is_the_whole_registry():
+    assert len(all_queries()) == 151
+    assert list(all_queries())[: len(DRIVER_ORDER)] == DRIVER_ORDER
+    assert set(all_queries()) == set(REGISTRY)
+    assert sum(1 for _, sql in REGISTRY.values() if sql is not None) == 139
 
 
 def test_registry_covers_every_survey_category():
     # one entry minimum per SURVEY §2 family — a missing prefix means a
     # coverage regression the judge would catch line-by-line. Driver-window
-    # families first; cd/sc/u-style extras keep their prefix in the
-    # combined registry.
-    # round-5 window families: the never-driver-checked cohort + the kept
-    # flagship/streaming/sink/graph/gate incumbents (see the ROUND-5
-    # ROTATION block in queries.py)
+    # families first, then the families held only outside DRIVER_ORDER.
     driver_prefixes = ["p", "st", "u", "rd", "cc", "dd", "dp", "e", "eq", "zo",
                        "mv", "w", "t", "sp", "h", "pm", "qb", "fe", "cal", "ab",
                        "sv", "sk", "dq", "mb", "eg", "tx", "rt", "sm", "ds", "gx"]
-    names = list(REGISTRY)
     for p in driver_prefixes:
-        assert any(n.startswith(p) and not n[len(p)].isalpha() for n in names if len(n) > len(p)), p
-    # families whose every entry already has a driver-green row in r1–r4
-    # rotated wholly to extras (the round-5 rotation converts the last 33
-    # never-checked entries instead) — still §2-covered in the combined
-    # registry, still locally oracled by test_oracle_differential
+        assert any(n.startswith(p) and not n[len(p)].isalpha() for n in DRIVER_ORDER if len(n) > len(p)), p
     combined = list(all_queries())
     for p in ["f", "a", "j", "mm", "c", "v", "ct", "rw", "pv", "sc",
               "cd", "ax", "o", "s", "q", "r", "tpch"]:
@@ -62,11 +60,10 @@ def test_oracled_fraction_stays_high():
     # rows-only entries must stay the justified minority (hash-seeded ops,
     # binary plumbing, approximate sketches) — in the driver window AND
     # across the full registry
-    n_oracle = sum(1 for _, sql in REGISTRY.values() if sql is not None)
-    assert n_oracle / len(REGISTRY) >= 0.85, f"{n_oracle}/{len(REGISTRY)} oracled in window"
-    all_reg = {**REGISTRY, **EXTRA_REGISTRY}
-    n_all = sum(1 for _, sql in all_reg.values() if sql is not None)
-    assert n_all / len(all_reg) >= 0.8, f"{n_all}/{len(all_reg)} oracled overall"
+    n_oracle = sum(1 for name in DRIVER_ORDER if REGISTRY[name][1] is not None)
+    assert n_oracle / len(DRIVER_ORDER) >= 0.85, f"{n_oracle}/{len(DRIVER_ORDER)} oracled in window"
+    n_all = sum(1 for _, sql in REGISTRY.values() if sql is not None)
+    assert n_all / len(REGISTRY) >= 0.8, f"{n_all}/{len(REGISTRY)} oracled overall"
 
 
 def test_names_are_stable_identifiers():

@@ -1,13 +1,16 @@
-"""Third-opinion oracles: pure-Python/pandas reimplementations of two
-integer-exact window entries, independent of BOTH engines.
+"""Third-opinion oracles: pure-Python/pandas reimplementations of ten
+driver-window entries, independent of BOTH engines.
 
 The DuckDB differential catches a Spark bug; it cannot catch a SHARED
 misunderstanding — the same wrong formula encoded in the Spark operator
 and its oracle SQL by the same author. These twins rebuild pm1 (quantized
-PMI collocations) and ds1 (DSIR importance ratios) from their published
-definitions with Python ints (arbitrary precision, exact floor division)
-and hashlib md5 — no Spark, no DuckDB — and assert equality with the
-engine output at driver scale.
+PMI collocations), ds1 (DSIR importance ratios), sm2 (mixture sample),
+sp1 (hash split), cal1 (calendar profile), rt1 (cohort retention), w4
+(session window), sv1 (conversion-time percentiles), fe1 (RFM features)
+and tx1 (text normalization) from their published definitions with
+Python ints (arbitrary precision, exact floor division) and hashlib md5
+— no Spark, no DuckDB — and assert equality with the engine output at
+driver scale.
 
 Faithfulness note: Spark tokenizes via split(trim(lower(text)), '\\s+')
 with Java's ASCII \\s; the sf0.01 corpus is verified all-ASCII (asserted

@@ -71,18 +71,41 @@ def test_every_driver_entry_executes_under_vanilla_confs(vanilla, sf_dir):
 
 
 def test_every_extra_entry_executes_under_vanilla_confs(vanilla, sf_dir):
-    """Same conf-independence sweep for the EXTRA_REGISTRY: extras rotate
-    into future driver windows, so they must already run under the
-    driver's default session confs."""
-    from otel_kafka_pg_spark.queries import EXTRA_REGISTRY
+    """Same conf-independence sweep for every registry entry outside
+    DRIVER_ORDER: any of them can enter the driver window, so they must
+    already run under the driver's default session confs."""
+    from otel_kafka_pg_spark.queries import DRIVER_ORDER, REGISTRY
 
+    extras = [name for name in REGISTRY if name not in DRIVER_ORDER]
+    assert len(extras) == 101
     prev_shuffle = vanilla.conf.get("spark.sql.shuffle.partitions")
     vanilla.conf.set("spark.sql.shuffle.partitions", "200")
     try:
-        for name, (fn, _) in EXTRA_REGISTRY.items():
-            assert fn(vanilla, sf_dir).count() >= 0, name
+        for name in extras:
+            assert REGISTRY[name][0](vanilla, sf_dir).count() >= 0, name
     finally:
         vanilla.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+
+
+def test_session_carries_every_tuned_conf(spark):
+    """get_spark is built on _tuned: the tests' session launches with each
+    engine conf _tuned sets (launch conf, so runtime overrides elsewhere in
+    the suite cannot mask a missing one)."""
+    from otel_kafka_pg_spark.session import _tuned
+
+    class Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+    launch = spark.sparkContext.getConf()
+    tuned = _tuned(Recorder(), int(launch.get("spark.sql.shuffle.partitions"))).conf
+    assert len(tuned) == 9
+    for key, value in tuned.items():
+        assert launch.get(key) == value, key
 
 
 def test_merge_precedence_is_policy_independent(vanilla):
