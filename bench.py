@@ -1,16 +1,22 @@
 #!/usr/bin/env python
-"""Benchmark harness — the engine's feedback loop.
+"""Benchmark harness for what perfbench/ does not measure.
 
-Default mode: run the headline query set (a representative slice of the
-SURVEY.md §2 registry) plus the flagship transcript pipeline at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``, write the FULL result (per-query wall times +
-stall detail) to ``BENCH/last_full_bench.json``, and print ONE COMPACT JSON
-line (< 2 KB — the grading driver's stdout capture truncates long lines;
-see compact_line())::
+perfbench/ (declared in BENCHMARK.json) is the benchmark of record for the
+pipeline's throughput and per-layer costs. This script keeps the two
+numbers it does not produce: the headline registry-query timings and the
+N→4N scaling efficiency.
+
+Default mode: time the headline query set (a representative slice of the
+SURVEY.md §2 registry) at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
+testdata directory, see SF_DIR) on ``local[$SPARK_GRAFT_CPUS]`` (default:
+the cores this process may run on), plus one run of the default pipeline,
+write the FULL result (per-query wall times + stall detail) to
+``BENCH/last_full_bench.json``, and print ONE COMPACT JSON line (< 2 KB —
+the grading driver's stdout capture truncates long lines; see
+compact_line())::
 
     {"metric": "total_bench_sec", "value": N, "unit": "sec",
-     "queries": {"pipeline": N, ...}, "sf": 0.1, "n_queries": N,
+     "queries": {"pipeline": N}, "sf": 0.1, "n_queries": N,
      "queries_total_sec": N, "pipeline_turns_per_sec": N,
      "probe_baseline_sec": N, "worst_stall_factor": N, "detail_file": "..."}
 
@@ -45,8 +51,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from otel_kafka_pg_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DETAIL_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "last_full_bench.json")
 
 # turns for the flagship pipeline bench, keyed by sf (≈ lineitem row count)
 PIPELINE_TURNS = {"0.001": 6_000, "0.01": 60_000, "0.1": 600_000}
@@ -201,15 +209,13 @@ def _pick_runs(walls: list[float], stalls: list[float]) -> dict:
     }
 
 
-def _timed_pipeline_run(spark, path: str, parse_impl: str, salt_buckets: int = 0) -> tuple[float, int]:
+def _timed_pipeline_run(spark, path: str) -> tuple[float, int]:
     from otel_kafka_pg_spark.plans.pipeline import run_pipeline
 
     out = tempfile.mkdtemp(prefix="bench_pipeline_")
     try:
         t0 = time.monotonic()
-        manifest = run_pipeline(
-            spark, path, out, parse_impl=parse_impl, salt_buckets=salt_buckets, resume=False
-        )
+        manifest = run_pipeline(spark, path, out, resume=False)
         return time.monotonic() - t0, next(iter(manifest["sinks"].values()))["input_rows"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -218,62 +224,47 @@ def _timed_pipeline_run(spark, path: str, parse_impl: str, salt_buckets: int = 0
 def run_pipeline_bench(
     spark,
     sf_dir: str,
-    parse_impl: str = "native",
     n_turns: int | None = None,
-    impls: tuple = None,
-    salt_buckets: int = 0,
     probe: StallProbe | None = None,
     n_runs: int = 5,
 ) -> dict:
-    """Full parse→enrich→route→sink run over synthetic transcripts sized to
-    the sf dir; returns wall time + turns/sec per parse impl.
+    """Full parse→enrich→route→sink run of the default pipeline over
+    synthetic transcripts sized to the sf dir; returns wall time +
+    turns/sec.
 
-    Timing discipline for this noisy sandbox (sporadic host CPU steal,
-    vmstat st spikes >15%, windows lasting minutes):
-    - JIT warm-up at 1% scale per impl first (steady-state codegen cost,
-      what a 10^12-row run sees — not one-off JVM compilation);
-    - impls run INTERLEAVED (native, pandas, native, pandas) so a steal
-      window penalizes both equally;
-    - best-of-5 per impl (min is the standard noise-robust estimator),
-      median reported alongside; every raw wall time is in runs_sec;
-    - every run carries a StallProbe label: the run-of-record's
-      stall_factor says whether ITS window was clean."""
+    A JIT warm-up at 1% scale runs first (steady-state codegen cost, not
+    one-off JVM compilation); then best-of-``n_runs`` with the median
+    alongside and every raw wall time in runs_sec. Each run carries a
+    StallProbe label: the run-of-record's stall_factor says whether ITS
+    window was clean."""
     from otel_kafka_pg_spark.plans.pipeline import run_pipeline
     from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
 
     probe = probe or StallProbe()
-    impls = impls or (parse_impl,)
     n_turns = _resolve_turns(sf_dir, n_turns)
     path = load_or_synth_transcripts(n_turns, seed=42)
     warm_path = load_or_synth_transcripts(max(n_turns // 100, 2000), seed=43)
-    for impl in impls:
-        warm_out = tempfile.mkdtemp(prefix="bench_warm_")
-        try:
-            run_pipeline(spark, warm_path, warm_out, parse_impl=impl, resume=False)
-        finally:
-            shutil.rmtree(warm_out, ignore_errors=True)
-    walls = {impl: [] for impl in impls}
-    stalls = {impl: [] for impl in impls}
+    warm_out = tempfile.mkdtemp(prefix="bench_warm_")
+    try:
+        run_pipeline(spark, warm_path, warm_out, resume=False)
+    finally:
+        shutil.rmtree(warm_out, ignore_errors=True)
+    walls, stalls = [], []
     rows = 0
     before = probe.sample()
-    for _ in range(n_runs):  # interleaved best-of-n
-        for impl in impls:
-            w, rows = _timed_pipeline_run(spark, path, impl, salt_buckets)
-            after = probe.sample()
-            walls[impl].append(w)
-            stalls[impl].append(max(before, after))
-            before = after  # the after-probe doubles as the next run's before
-    results = {}
-    for impl in impls:
-        picked = _pick_runs(walls[impl], stalls[impl])
-        results[impl] = {
-            "turns": rows,
-            **picked,
-            "turns_per_sec": round(rows / picked["wall_sec"], 1),
-            "turns_per_sec_median": round(rows / picked["wall_sec_median"], 1),
-            "parse_impl": impl,
-        }
-    return results if len(impls) > 1 else results[impls[0]]
+    for _ in range(n_runs):
+        w, rows = _timed_pipeline_run(spark, path)
+        after = probe.sample()
+        walls.append(w)
+        stalls.append(max(before, after))
+        before = after  # the after-probe doubles as the next run's before
+    picked = _pick_runs(walls, stalls)
+    return {
+        "turns": rows,
+        **picked,
+        "turns_per_sec": round(rows / picked["wall_sec"], 1),
+        "turns_per_sec_median": round(rows / picked["wall_sec_median"], 1),
+    }
 
 
 def run_queries_bench(
@@ -306,38 +297,20 @@ def run_queries_bench(
     return timings, detail
 
 
-def main_bench(
-    cpus: int, sf_dir: str, pipeline_only: bool, turns: int | None = None, salt_buckets: int = 0,
-    n_runs: int = 5,
-) -> dict:
+def main_bench(cpus: int, sf_dir: str, pipeline_only: bool, turns: int | None = None, n_runs: int = 1) -> dict:
+    """Best-of-``n_runs`` pipeline runs, then the headline queries unless
+    ``pipeline_only`` (the --scaling child)."""
     from otel_kafka_pg_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench_c{cpus}", cpus=cpus)
     # warm the JVM/codegen path so timings measure the engine, not startup
     spark.range(1000).selectExpr("sum(id)").collect()
     probe = StallProbe()
-    if pipeline_only:
-        pipeline = run_pipeline_bench(
-            spark, sf_dir, n_turns=turns, salt_buckets=salt_buckets, probe=probe, n_runs=n_runs
-        )
-        queries = {"pipeline": pipeline["wall_sec"]}
-        detail = {"pipeline": {k: pipeline[k] for k in ("wall_sec_median", "stall_factor", "stall_max")}}
-        extra = {"pipeline": pipeline}
-    else:
-        # both parse impls, interleaved (same output, asserted byte-identical
-        # in tests): native codegen regexp (the default) vs the Arrow
-        # grok-UDF twin. "pipeline" = the DEFAULT configuration's number.
-        both = run_pipeline_bench(
-            spark, sf_dir, n_turns=turns, impls=("native", "pandas"),
-            salt_buckets=salt_buckets, probe=probe, n_runs=n_runs,
-        )
-        queries, detail = run_queries_bench(spark, sf_dir, HEADLINE, probe=probe)
-        queries["pipeline"] = both["native"]["wall_sec"]
-        queries["pipeline_pandas"] = both["pandas"]["wall_sec"]
-        for label, impl in (("pipeline", "native"), ("pipeline_pandas", "pandas")):
-            detail[label] = {k: both[impl][k] for k in ("wall_sec_median", "stall_factor", "stall_max")}
-        extra = {"pipeline": both["native"], "pipeline_pandas": both["pandas"]}
-    result = {
+    pipeline = run_pipeline_bench(spark, sf_dir, n_turns=turns, probe=probe, n_runs=n_runs)
+    queries, detail = ({}, {}) if pipeline_only else run_queries_bench(spark, sf_dir, HEADLINE, probe=probe)
+    queries["pipeline"] = pipeline["wall_sec"]
+    detail["pipeline"] = {k: pipeline[k] for k in ("wall_sec_median", "stall_factor", "stall_max")}
+    return {
         "metric": "total_bench_sec",
         "value": round(sum(queries.values()), 3),
         "unit": "sec",
@@ -348,9 +321,8 @@ def main_bench(
         # cleanliness + the absolute probe baseline for cross-round checks
         "stall": detail,
         "probe_baseline_sec": round(probe.baseline, 4),
-        **extra,
+        "pipeline": pipeline,
     }
-    return result
 
 
 def _spin(n: int) -> float:
@@ -434,7 +406,7 @@ def compact_line(result: dict, detail_file: str) -> dict:
     stdout line now carries only the totals, the pipeline numbers, the probe
     baseline, and the worst per-query stall factor; the FULL result —
     per-query wall times and the complete stall-detail map — goes to
-    ``detail_file`` (committed under BENCH/), which the judge reads directly.
+    ``detail_file``.
     """
     stall = result.get("stall", {})
     worst_name, worst = "", 0.0
@@ -443,15 +415,15 @@ def compact_line(result: dict, detail_file: str) -> dict:
         if f > worst:
             worst_name, worst = name, f
     queries = result.get("queries", {})
-    qtimes = {k: v for k, v in queries.items() if not k.startswith("pipeline")}
+    qtimes = {k: v for k, v in queries.items() if k != "pipeline"}
     slowest = dict(sorted(qtimes.items(), key=lambda kv: -kv[1])[:3])
     pipe = result.get("pipeline", {})
     return {
         "metric": result["metric"],
         "value": result["value"],
         "unit": result["unit"],
-        # the pipeline numbers inline; the full per-query map is in detail_file
-        "queries": {k: v for k, v in queries.items() if k.startswith("pipeline")},
+        # the pipeline number inline; the full per-query map is in detail_file
+        "queries": {"pipeline": queries["pipeline"]},
         "sf": result["sf"],
         "cpus": result["cpus"],
         "n_queries": len(qtimes),
@@ -474,34 +446,18 @@ if __name__ == "__main__":
     ap.add_argument("--scaling-low", type=int, default=1)
     ap.add_argument("--scaling-high", type=int, default=4)
     ap.add_argument("--turns", type=int, default=None)
-    ap.add_argument("--runs", type=int, default=5, help="pipeline repetitions (interleaved best-of-n)")
+    ap.add_argument("--runs", type=int, default=5, help="--pipeline-only repetitions (best-of-n)")
     ap.add_argument("--scaling-turns", type=int, default=2_400_000)
-    ap.add_argument("--salt-buckets", type=int, default=0,
-                    help="pre-parse salted repartition buckets (0 = off, the default plan)")
-    ap.add_argument("--detail-file", default=None,
-                    help="where the FULL per-query result JSON is written in headline mode "
-                         "(default BENCH/last_full_bench.json next to this script)")
-    ap.add_argument("--full-line", action="store_true",
-                    help="print the full result on stdout instead of the compact line")
     args = ap.parse_args()
     if args.scaling:
         result = main_scaling(args.sf_dir, args.scaling_low, args.scaling_high, args.scaling_turns)
-        print(json.dumps(result))
     elif args.pipeline_only:
-        # small payload (and main_scaling parses it from stdout) — unchanged
-        result = main_bench(args.cpus, args.sf_dir, True, args.turns, args.salt_buckets, args.runs)
-        print(json.dumps(result))
+        # the small full payload: main_scaling parses it from stdout
+        result = main_bench(args.cpus, args.sf_dir, True, args.turns, args.runs)
     else:
-        result = main_bench(args.cpus, args.sf_dir, False, args.turns, args.salt_buckets, args.runs)
-        detail_file = args.detail_file or os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH", "last_full_bench.json"
-        )
-        detail_dir = os.path.dirname(detail_file)
-        if detail_dir:  # bare filename → cwd; makedirs("") raises
-            os.makedirs(detail_dir, exist_ok=True)
-        with open(detail_file, "w") as f:
-            json.dump(result, f, indent=1)
-        if args.full_line:
-            print(json.dumps(result))
-        else:
-            print(json.dumps(compact_line(result, os.path.relpath(detail_file, os.getcwd()))))
+        full = main_bench(args.cpus, args.sf_dir, False, args.turns)
+        os.makedirs(os.path.dirname(DETAIL_FILE), exist_ok=True)
+        with open(DETAIL_FILE, "w") as f:
+            json.dump(full, f, indent=1)
+        result = compact_line(full, os.path.relpath(DETAIL_FILE, os.getcwd()))
+    print(json.dumps(result))

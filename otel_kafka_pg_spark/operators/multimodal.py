@@ -95,13 +95,6 @@ def extract_features(df: DataFrame, use_real_decode: bool = False) -> DataFrame:
     return df.mapInPandas(run, FEATURES_SCHEMA)
 
 
-def resize_image(payload: bytes, mime: str, width: int, height: int):  # pragma: no cover - stub
-    """STUB: real resize requires an image codec (PIL), absent here. The
-    Spark-side plumbing (frame_sample / extract_features) is real; this is
-    the one-line swap point when codecs exist."""
-    raise NotImplementedError("image resize requires PIL; not available in this container")
-
-
 FRAMES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

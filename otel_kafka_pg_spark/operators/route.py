@@ -41,7 +41,8 @@ def with_attributes(df: DataFrame) -> DataFrame:
     signal_type (CaseWhen evaluates only the taken branch). The precedence
     merge + sort + render is the most expensive scalar work in the pipeline;
     computing it here — in the same stage that is persisted and scanned by
-    all three sinks — does the work 1× instead of once per sink scan."""
+    all three sinks — does the work 1× instead of once per sink scan. The
+    sink builders read only this column."""
     rec, res = record_attrs_map(), resource_attrs_map()
     return df.withColumn(
         "attributes",
@@ -50,14 +51,6 @@ def with_attributes(df: DataFrame) -> DataFrame:
             canonical_json(merge_attrs(rec, res, resource_wins=True)),
         ).otherwise(canonical_json(merge_attrs(rec, res, resource_wins=False))),
     )
-
-
-def _attrs(df: DataFrame, resource_wins: bool):
-    """Precomputed attributes column when present (pipeline path), else the
-    inline precedence merge (standalone sink-builder use in tests)."""
-    if "attributes" in df.columns:
-        return F.col("attributes")
-    return canonical_json(merge_attrs(record_attrs_map(), resource_attrs_map(), resource_wins))
 
 
 def _ms(col: str = "ts"):
@@ -75,9 +68,9 @@ def _hash_id(kind: str):
 def to_traces(df: DataFrame) -> DataFrame:
     """Trace-routed rows → traces sink schema (schema.go:36-52 analog).
 
-    Attr precedence: resource wins (processor.go:116-119).
+    Attr precedence: resource wins (processor.go:116-119), applied by
+    with_attributes.
     """
-    attrs = _attrs(df, resource_wins=True)
     start = _ms()
     dur = F.coalesce(F.col("dur_ms"), F.lit(0.0))
     return df.filter(F.col("signal_type") == "trace").select(
@@ -96,7 +89,7 @@ def to_traces(df: DataFrame) -> DataFrame:
         F.try_add(start, dur.try_cast("long")).alias("end_time"),
         dur.alias("duration"),
         "status",
-        attrs.alias("attributes"),
+        "attributes",
         "conv_id",
         "turn_idx",
     )
@@ -106,9 +99,8 @@ def to_logs(df: DataFrame) -> DataFrame:
     """Log-routed rows → logs sink schema (schema.go:64-74 analog).
 
     Attr precedence: record wins (processor.go:213-218) — note the asymmetry
-    vs to_traces.
+    vs to_traces, applied by with_attributes.
     """
-    attrs = _attrs(df, resource_wins=False)
     return df.filter(F.col("signal_type") == "log").select(
         _hash_id("log").alias("id"),
         _ms().alias("timestamp"),
@@ -117,7 +109,7 @@ def to_logs(df: DataFrame) -> DataFrame:
         "severity",
         "trace_id",
         "span_id",
-        attrs.alias("attributes"),
+        "attributes",
         "conv_id",
         "turn_idx",
     )
@@ -127,7 +119,6 @@ def to_metrics(df: DataFrame) -> DataFrame:
     """Metric-routed rows → metrics sink schema (schema.go:83-97 analog —
     the table the reference declares but never populates; record wins, as
     metrics follow the log decode path in spirit)."""
-    attrs = _attrs(df, resource_wins=False)
     return df.filter(F.col("signal_type") == "metric").select(
         _hash_id("metric").alias("id"),
         F.col("metric_name"),
@@ -135,7 +126,7 @@ def to_metrics(df: DataFrame) -> DataFrame:
         "service_name",
         _ms().alias("timestamp"),
         F.col("metric_value").alias("value"),
-        attrs.alias("attributes"),
+        "attributes",
         "conv_id",
         "turn_idx",
     )

@@ -146,39 +146,14 @@ def input_fingerprint(path: str) -> str:
     other. An unlistable or empty input must never share a fingerprint
     with a different unlistable or empty input, otherwise resume would
     treat them as the same dataset and skip all work (the "" == ""
-    false-match) — but "unlistable" means a REAL listing error, reported
-    loudly; a missing pyarrow falls back to ``os``-level listing for
-    local paths rather than silently disabling resume forever.
+    false-match) — so a REAL listing error gets a per-call nonce and is
+    reported loudly.
     """
+    import pyarrow.fs as pafs
+
     is_uri = "://" in path
     norm = path.replace("s3a://", "s3://", 1) if is_uri else os.path.abspath(path)
     parts = [f"path={norm}"]
-    try:
-        import pyarrow.fs as pafs
-    except ImportError:
-        if is_uri:
-            # cannot list a remote filesystem without pyarrow — unmatchable
-            # nonce (resume rewrites), and say so instead of silently looping
-            print(
-                f"[manifest] pyarrow unavailable; cannot fingerprint remote input {norm!r} "
-                "— resume disabled for this run",
-                file=sys.stderr,
-            )
-            parts.append(f"unlistable:{os.urandom(8).hex()}")
-        elif os.path.isfile(norm):
-            parts.append(f"{os.path.basename(norm)}:{os.path.getsize(norm)}")
-        elif os.path.isdir(norm):
-            entries = []
-            for dirpath, _dirs, files in os.walk(norm):
-                for base in files:
-                    if base.startswith(("_", ".")):
-                        continue
-                    full = os.path.join(dirpath, base)
-                    entries.append(f"{os.path.relpath(full, norm)}:{os.path.getsize(full)}")
-            parts.extend(sorted(entries))
-        else:
-            parts.append("missing")
-        return "|".join(parts)
     try:
         filesystem, root = pafs.FileSystem.from_uri(norm)
         info = filesystem.get_file_info(root)

@@ -32,6 +32,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .manifest import write_with_summary
+
 ICEBERG_CATALOG = "local_iceberg"
 
 
@@ -138,25 +140,14 @@ def retention_delete(spark: SparkSession, path: str, delete_cond) -> int:
     The two-rename swap has a crash window where ``path`` is briefly
     absent; entry-time ``recover_interrupted_swap`` restores a stranded
     ``.old`` survivor, so the operation is restartable."""
-    from pyspark.sql import Observation
-
     recover_interrupted_swap(path)
     df = spark.read.parquet(path)
     keep = df.filter(delete_cond.isNull() | ~delete_cond)
     tmp = path.rstrip("/") + ".rewrite.tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    # survivor count rides the write job itself (the write_with_summary
-    # observe pattern) instead of a full read-back scan of the rewritten
-    # data; parquet footers validate it against what actually committed
-    # (observe accumulators can double-count under task retries)
-    obs = Observation()
-    keep.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(tmp)
-    n = obs.get["n"]
-    from .manifest import parquet_file_lineage
-
-    committed = sum(e["rows"] for e in parquet_file_lineage(tmp))
-    if committed != n:  # a retry double-counted: trust the footers
-        n = committed
+    # survivor count rides the write job itself, checked against the
+    # committed parquet footers (write_with_summary's retry guard)
+    n, _h, _lineage = write_with_summary(keep, tmp)
     atomic_swap(tmp, path)
     return n
 

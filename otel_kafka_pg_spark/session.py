@@ -12,7 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local parallelism: the deployment setting when given, else every core this
+# process may run on (a fixed fallback oversubscribes small hosts)
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _tuned(builder, shuffle_partitions: int):

@@ -7,11 +7,15 @@ compact line is small and complete regardless of how many headline
 queries exist, and the full result round-trips through the detail file.
 """
 
+import fnmatch
 import importlib.util
 import json
 import os
+import re
+import subprocess
 
-_BENCH = os.path.join(os.path.dirname(__file__), "..", "bench.py")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_BENCH = os.path.join(_ROOT, "bench.py")
 _spec = importlib.util.spec_from_file_location("bench_mod", _BENCH)
 bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench)
@@ -20,7 +24,6 @@ _spec.loader.exec_module(bench)
 def _fake_full_result(n_queries: int) -> dict:
     queries = {f"q{i:02d}_long_operator_name_for_size_{i}": 0.123 + i * 0.01 for i in range(n_queries)}
     queries["pipeline"] = 6.29
-    queries["pipeline_pandas"] = 7.41
     stall = {k: {"wall_sec_median": v, "stall_factor": 1.0 + (i % 7) / 10, "stall_max": 1.9}
              for i, (k, v) in enumerate(queries.items())}
     return {
@@ -33,7 +36,6 @@ def _fake_full_result(n_queries: int) -> dict:
         "stall": stall,
         "probe_baseline_sec": 0.2006,
         "pipeline": {"turns": 600000, "turns_per_sec": 95400.0, "wall_sec": 6.29},
-        "pipeline_pandas": {"turns": 600000, "turns_per_sec": 81000.0, "wall_sec": 7.41},
     }
 
 
@@ -68,3 +70,32 @@ def test_compact_line_worst_stall_names_the_query():
     out = bench.compact_line(full, "x.json")
     assert out["worst_stall_factor"] == 3.77
     assert out["worst_stall_query"] == "q03_long_operator_name_for_size_3"
+
+
+# a BENCH/ json path or glob as cited in prose or code
+_CITED = re.compile(r"BENCH/[\w*.-]+?\.json")
+_CITING_DOCS = ("README.md", "SURVEY.md", "SCALE.md", "PLANS.md")
+
+
+def _repo_files() -> list[str]:
+    """Tracked files (git), else every file on disk under the repo root."""
+    try:
+        out = subprocess.run(["git", "ls-files"], cwd=_ROOT, capture_output=True, text=True, check=True)
+        return out.stdout.splitlines()
+    except (OSError, subprocess.CalledProcessError):
+        return [os.path.relpath(os.path.join(d, f), _ROOT) for d, _, fs in os.walk(_ROOT) for f in fs]
+
+
+def test_every_cited_bench_file_exists():
+    """BENCH/ keeps only the files the docs and code still cite: each cited
+    path or glob must resolve to a tracked file. bench.py's own output,
+    BENCH/last_full_bench.json, is written at run time and never tracked."""
+    files = _repo_files()
+    tracked = [f for f in files if f.startswith("BENCH/")]
+    cited = set()
+    for name in (f for f in files if f in _CITING_DOCS or f.endswith(".py")):
+        with open(os.path.join(_ROOT, name), encoding="utf-8") as fh:
+            cited |= {(name, m) for m in _CITED.findall(fh.read()) if m != "BENCH/last_full_bench.json"}
+    assert cited, "no BENCH/ citation found — the pattern no longer matches"
+    missing = sorted((name, m) for name, m in cited if not fnmatch.filter(tracked, m))
+    assert not missing, missing

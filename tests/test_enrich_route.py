@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from otel_kafka_pg_spark.functions.parse import parse_turns_native
 from otel_kafka_pg_spark.operators.enrich import enrich_with_lookup
-from otel_kafka_pg_spark.operators.route import classify_signal, to_logs, to_traces
+from otel_kafka_pg_spark.operators.route import classify_signal, to_logs, to_traces, with_attributes
 from otel_kafka_pg_spark.schemas import SERVICE_LOOKUP, TRANSCRIPTS
 
 TS = dt.datetime(2025, 1, 1)
@@ -22,7 +22,8 @@ TRACE_TXT = "x trace=" + "a" * 32 + " span=" + "b" * 16 + " call:bash(a) status=
 def _prep(spark, rows, lookup_rows):
     df = spark.createDataFrame(rows, TRANSCRIPTS)
     lk = spark.createDataFrame(lookup_rows, SERVICE_LOOKUP)
-    return classify_signal(enrich_with_lookup(parse_turns_native(df), lk))
+    # as in build_routed, with_attributes adds the column the sink builders read
+    return with_attributes(classify_signal(enrich_with_lookup(parse_turns_native(df), lk)))
 
 
 def _conflicting_lookup():
