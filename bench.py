@@ -355,7 +355,7 @@ def cpu_frequency_factor(low: int, high: int, work: int = 3_000_000) -> float:
     return rates[high] / rates[low]
 
 
-def main_scaling(sf_dir: str, low: int, high: int, turns: int) -> dict:
+def main_scaling(low: int, high: int, turns: int) -> dict:
     """Same job, same input, two parallelism levels → scaling efficiency.
 
     efficiency = (throughput_high / throughput_low) / (high / low); ≥0.8 is
@@ -367,11 +367,11 @@ def main_scaling(sf_dir: str, low: int, high: int, turns: int) -> dict:
     per-core frequency factor between the two levels (see
     cpu_frequency_factor) and the hardware-normalized efficiency — the
     number a cluster, whose executors do not downclock each other, would
-    see."""
+    see. ``turns`` alone sizes the input, so the line carries no sf."""
     results = {}
     for cpus in (low, high):
         out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--pipeline-only", "--cpus", str(cpus), "--sf-dir", sf_dir,
+            [sys.executable, os.path.abspath(__file__), "--pipeline-only", "--cpus", str(cpus),
              "--turns", str(turns), "--runs", "3"],
             capture_output=True,
             text=True,
@@ -387,7 +387,6 @@ def main_scaling(sf_dir: str, low: int, high: int, turns: int) -> dict:
         "value": round(eff, 3),
         "unit": "ratio",
         "turns": turns,
-        "sf": sf_of(sf_dir),
         "low": {"cpus": low, "turns_per_sec": tp_low},
         "high": {"cpus": high, "turns_per_sec": tp_high},
         "speedup": round(tp_high / tp_low, 3),
@@ -450,7 +449,7 @@ if __name__ == "__main__":
     ap.add_argument("--scaling-turns", type=int, default=2_400_000)
     args = ap.parse_args()
     if args.scaling:
-        result = main_scaling(args.sf_dir, args.scaling_low, args.scaling_high, args.scaling_turns)
+        result = main_scaling(args.scaling_low, args.scaling_high, args.scaling_turns)
     elif args.pipeline_only:
         # the small full payload: main_scaling parses it from stdout
         result = main_bench(args.cpus, args.sf_dir, True, args.turns, args.runs)

@@ -37,6 +37,9 @@ Field semantics mirrored from the reference:
 
 from __future__ import annotations
 
+import functools
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,8 +59,24 @@ RE_PARENT = r"parent=([0-9a-f]{16})"
 # transcript grammar) this is exactly \b.
 _BL = r"(?<![0-9A-Za-z_])"  # ASCII boundary, left of token
 _BR = r"(?![0-9A-Za-z_])"  # ASCII boundary, right of token
+_SEV_WORDS = ("TRACE", "DEBUG", "INFO", "WARN", "ERROR", "FATAL")
+
+
+def _first_char_guard(*alternatives: str) -> str:
+    """Zero-width lookahead on the first characters the alternatives can
+    start with. Patterns that open with a lookbehind or an alternation have
+    no literal prefix, so java.util.regex tries the whole pattern at every
+    offset of the text; the one-character class rejects most offsets first
+    (about a third less parse CPU on 60k synthetic turns). Every
+    alternative must open with a literal character (pinned by
+    tests/test_parse.py)."""
+    return "(?=[" + re.escape("".join(sorted({a[0] for a in alternatives}))) + "])"
+
+
 # lookbehind: the ERROR in "status=ERROR" is a status value, not a severity
-RE_SEV_TOK = r"(?<!status=)" + _BL + r"(TRACE|DEBUG|INFO|WARN|ERROR|FATAL)" + _BR
+RE_SEV_TOK = (
+    _first_char_guard(*_SEV_WORDS) + r"(?<!status=)" + _BL + "(" + "|".join(_SEV_WORDS) + ")" + _BR
+)
 RE_SEV_NUM = r"severity_number=([0-9]+)"
 RE_CALL = r"call:([A-Za-z_][A-Za-z0-9_]*)\("
 RE_STATUS = r"status=(OK|ERROR)"
@@ -67,11 +86,22 @@ RE_METRIC_VAL = r"metric:[A-Za-z_][A-Za-z0-9_]*=([-0-9.]+)"
 
 # Everything the message-stripper removes (order matters: composite markers
 # before bare tokens).
+_MARKER_ALTS = (
+    r"trace=[0-9a-f]{32}",
+    r"span=[0-9a-f]{16}",
+    r"parent=[0-9a-f]{16}",
+    r"call:[A-Za-z_][A-Za-z0-9_]*\([^)]*\)",
+    r"status=(?:OK|ERROR)",
+    r"dur=[0-9.]+ms",
+    r"severity_number=[0-9]+",
+    r"metric:[A-Za-z_][A-Za-z0-9_]*=[-0-9.]+",
+)
 RE_MARKERS = (
-    r"(trace=[0-9a-f]{32}|span=[0-9a-f]{16}|parent=[0-9a-f]{16}"
-    r"|call:[A-Za-z_][A-Za-z0-9_]*\([^)]*\)|status=(?:OK|ERROR)|dur=[0-9.]+ms"
-    r"|severity_number=[0-9]+|metric:[A-Za-z_][A-Za-z0-9_]*=[-0-9.]+"
-    r"|" + _BL + r"(?:TRACE|DEBUG|INFO|WARN|ERROR|FATAL)" + _BR + r")"
+    _first_char_guard(*_MARKER_ALTS, *_SEV_WORDS)
+    + "("
+    + "|".join(_MARKER_ALTS)
+    + "|" + _BL + "(?:" + "|".join(_SEV_WORDS) + ")" + _BR
+    + ")"
 )
 
 
@@ -85,26 +115,32 @@ def _severity_from(tok: Column, num: Column) -> Column:
 
 def parse_turns_native(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Parse via JVM-side regexp expressions (whole-stage codegen path)."""
+    return df.withColumns(dict(_parsed_columns(text_col)))
+
+
+@functools.cache
+def _parsed_columns(text_col: str) -> tuple[tuple[str, Column], ...]:
+    """The parse expressions depend only on the text column's name, so they
+    are built once per name: each function call and literal is a few py4j
+    round trips, paid otherwise on every pipeline run."""
     t = F.col(text_col)
     sev_tok = F.regexp_extract(t, RE_SEV_TOK, 1)
     sev_num = F.regexp_extract(t, RE_SEV_NUM, 1)
     status_raw = F.regexp_extract(t, RE_STATUS, 1)
     dur_raw = F.regexp_extract(t, RE_DUR, 1)
     metric_raw = F.regexp_extract(t, RE_METRIC_VAL, 1)
-    return df.withColumns(
-        {
-            "trace_id": F.regexp_extract(t, RE_TRACE, 1),
-            "span_id": F.regexp_extract(t, RE_SPAN, 1),
-            "parent_span_id": F.regexp_extract(t, RE_PARENT, 1),
-            "severity": _severity_from(sev_tok, sev_num),
-            "status": F.when(status_raw != "", status_raw).otherwise(F.lit("UNSET")),
-            "call_tool": F.regexp_extract(t, RE_CALL, 1),
-            "dur_ms": F.nullif(dur_raw, F.lit("")).try_cast("double"),
-            "metric_name": F.regexp_extract(t, RE_METRIC_NAME, 1),
-            "metric_value": F.nullif(metric_raw, F.lit("")).try_cast("double"),
-            "message": F.trim(F.regexp_replace(F.regexp_replace(t, RE_MARKERS, ""), r"\s+", " ")),
-        }
-    )
+    return tuple({
+        "trace_id": F.regexp_extract(t, RE_TRACE, 1),
+        "span_id": F.regexp_extract(t, RE_SPAN, 1),
+        "parent_span_id": F.regexp_extract(t, RE_PARENT, 1),
+        "severity": _severity_from(sev_tok, sev_num),
+        "status": F.when(status_raw != "", status_raw).otherwise(F.lit("UNSET")),
+        "call_tool": F.regexp_extract(t, RE_CALL, 1),
+        "dur_ms": F.nullif(dur_raw, F.lit("")).try_cast("double"),
+        "metric_name": F.regexp_extract(t, RE_METRIC_NAME, 1),
+        "metric_value": F.nullif(metric_raw, F.lit("")).try_cast("double"),
+        "message": F.trim(F.regexp_replace(F.regexp_replace(t, RE_MARKERS, ""), r"\s+", " ")),
+    }.items())
 
 
 # Engine-semantics note (measured on Spark 4.1 / CPython 3.x, pinned by

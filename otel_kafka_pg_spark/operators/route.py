@@ -20,10 +20,12 @@ double duration.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.attrs import canonical_json, merge_attrs, record_attrs_map, resource_attrs_map
+from ..functions.attrs import canonical_json, merge_attrs, record_attrs_map, record_carries, resource_attrs_map
 
 
 def classify_signal(df: DataFrame) -> DataFrame:
@@ -43,14 +45,20 @@ def with_attributes(df: DataFrame) -> DataFrame:
     computing it here — in the same stage that is persisted and scanned by
     all three sinks — does the work 1× instead of once per sink scan. The
     sink builders read only this column."""
+    return df.withColumn("attributes", _attributes())
+
+
+@functools.cache
+def _attributes() -> Column:
+    """The attributes expression reads only fixed column names, so it is one
+    value for every frame. Building it is about 1,200 py4j round trips (each
+    function call, literal and lambda is several), which the driver would
+    otherwise pay on every pipeline run before the first job starts."""
     rec, res = record_attrs_map(), resource_attrs_map()
-    return df.withColumn(
-        "attributes",
-        F.when(
-            F.col("signal_type") == "trace",
-            canonical_json(merge_attrs(rec, res, resource_wins=True)),
-        ).otherwise(canonical_json(merge_attrs(rec, res, resource_wins=False))),
-    )
+    return F.when(
+        F.col("signal_type") == "trace",
+        canonical_json(merge_attrs(rec, res, resource_wins=True)),
+    ).otherwise(canonical_json(merge_attrs(rec, res, resource_wins=False, record_has=record_carries)))
 
 
 def _ms(col: str = "ts"):
@@ -133,6 +141,14 @@ def to_metrics(df: DataFrame) -> DataFrame:
 
 
 SINK_BUILDERS = {"traces": to_traces, "logs": to_logs, "metrics": to_metrics}
+
+# every column of the routed frame that a sink builder or sink_counts reads
+# (pinned by tests/test_plan_guards.py) — what run_pipeline caches
+SINK_COLUMNS = (
+    "signal_type", "conv_id", "turn_idx", "ts", "role", "tool", "service_name",
+    "trace_id", "span_id", "parent_span_id", "call_tool", "dur_ms", "status",
+    "severity", "message", "metric_name", "metric_value", "attributes",
+)
 
 
 def sink_counts(routed: DataFrame) -> DataFrame:

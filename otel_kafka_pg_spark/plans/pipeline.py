@@ -6,24 +6,30 @@ consumer.go:162-329). One lazily-built DAG:
 
     read parquet                                              [size-balanced splits]
       → vectorized parse of text                              [decoder batch, narrow]
-      → window(conv_id, turn_idx) stable ordering             [row-for-row parity]
       → broadcast-join enrich on (tool, role)                 [resource attrs]
       → classify signal_type                                  [topic dispatch]
-      → persist                                               [one scan, 3 sinks]
+      → canonical attributes JSON                             [one render per row]
+      → persist the sink-read columns                         [one scan, 4 sinks]
       → per-sink filtered write + per-sink aggregate counts   [flush + count logs]
       → manifest entry per sink                               [checkpoint/lineage]
 
 Scale notes (the plan that must survive 1000 executors / 100 TB):
-- the only wide operations are the ordering window (shuffle by conv_id)
-  and the counts aggregation (map-side partial); parse/enrich/route/write
-  are pipelined narrow stages under whole-stage codegen (native parse) or
-  Arrow batches (pandas parse). An optional pre-parse salted repartition
-  (salt_buckets>0) exists for skew-LAID-OUT sources — see build_routed.
+- everything before the sinks is one narrow pipelined stage per scan
+  split: no exchange, under whole-stage codegen (native parse) or Arrow
+  batches (pandas parse). The only wide operation is the counts
+  aggregation (map-side partial). Sink rows carry content-derived IDs, so
+  no ordering is needed; the ordering window (operators/order.py) is not
+  in the DAG. Sources with fewer scan splits than cores (one big file,
+  skew-laid-out inputs) opt into the pre-parse salted repartition with
+  ``salt_buckets>0`` — see build_routed.
 - the enrich join is a broadcast hash join by construction — no shuffle of
   the fact side, no skew exposure.
-- fan-out materializes the routed frame once (persist, MEMORY_AND_DISK_DESER:
-  blocks that do not fit in executor memory spill to local disk) and
-  scans it four times; a single-sink resume skips the cache.
+- fan-out materializes the routed frame's SINK_COLUMNS once (persist,
+  MEMORY_AND_DISK_DESER: blocks that do not fit in executor memory spill to
+  local disk). The first pending sink fills the cache; the others then scan
+  it concurrently from driver threads, each its own Spark job, the way the
+  reference flushes each signal type's batch on its own
+  (consumer.go:302,316). A single-sink resume skips the cache.
 - writes are per-sink parquet (Iceberg-ready: swap the writer for
   ``writeTo(...).append()`` — the manifest/resume logic is sink-agnostic).
 """
@@ -31,13 +37,16 @@ Scale notes (the plan that must survive 1000 executors / 100 TB):
 from __future__ import annotations
 
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..operators.enrich import enrich_with_lookup
-from ..operators.order import salted_repartition, with_stable_order
-from ..operators.route import SINK_BUILDERS, classify_signal, sink_counts, with_attributes
+from ..operators.order import salted_repartition
+from ..operators.route import SINK_BUILDERS, SINK_COLUMNS, classify_signal, sink_counts, with_attributes
 from ..sources.synth import service_lookup_pandas
 from .manifest import (
     input_fingerprint,
@@ -83,19 +92,15 @@ def build_routed(
 ) -> DataFrame:
     """Compose the full transform DAG up to (but excluding) the sinks.
 
-    ``salt_buckets=0`` (default) skips the pre-parse salted repartition:
-    parquet scan splits are already size-balanced (maxPartitionBytes), the
-    parse/enrich stages are embarrassingly parallel over whatever splits
-    the scan produced, and the ordering window immediately re-shuffles by
-    bare conv_id anyway — so the salted exchange was a full-input shuffle
-    whose skew benefit applied to a stage that was already balanced
-    (round-2 measurement in BENCH/BASELINE.md: dropping it removed one of
-    two exchanges and cut pipeline wall time; the window itself remains
-    the true skew point, bounded by the 4 000-turn conversation cap).
-    Pass ``salt_buckets>0`` to re-enable for sources whose LAYOUT is
-    skewed (e.g. one giant input file per hot conversation, kafka
-    partitions keyed by conv_id) — there the scan splits themselves are
-    unbalanced and the salted exchange buys parse-stage balance."""
+    The default plan has no exchange: parquet scan splits are already
+    size-balanced (maxPartitionBytes), and parse/enrich/classify/attributes
+    are per-row over whatever splits the scan produced. Pass
+    ``salt_buckets>0`` for sources whose LAYOUT gives fewer splits than
+    cores or unbalanced ones (one big input file, one file per hot
+    conversation, kafka partitions keyed by conv_id): the salted exchange
+    then buys parse-stage parallelism and balance (60k turns in one file of
+    two row groups on 4 cores: 3.8–4.9 s per run_pipeline by default,
+    3.1–3.3 s with 16 buckets; SCALE.md)."""
     from ..functions.parse import parse_turns
 
     if lookup is None:
@@ -105,7 +110,6 @@ def build_routed(
         n = num_partitions or spark.sparkContext.defaultParallelism
         df = salted_repartition(df, n, salt_buckets)
     df = parse_turns(df, impl=parse_impl)
-    df = with_stable_order(df)
     df = enrich_with_lookup(df, lookup)
     return with_attributes(classify_signal(df))
 
@@ -124,7 +128,9 @@ def run_pipeline(
 
     Returns the manifest. With ``resume=True``, sinks already completed for
     the same input fingerprint are skipped (idempotent resume of partially
-    completed routes).
+    completed routes). The first pending sink is written alone; the others
+    then run concurrently, and each is saved to the manifest as it
+    completes, with the wall time of its write as ``write_s``.
     """
     fp = input_fingerprint(input_path)
     fp += "|lookup:" + _lookup_fingerprint(lookup if lookup is not None else service_lookup_pandas())
@@ -151,26 +157,43 @@ def run_pipeline(
     # a single-sink resume scans the frame exactly once
     cached = len(pending) > 1
     if cached:
-        routed = routed.persist()
+        routed = routed.select(*SINK_COLUMNS).persist()
+    builders = {**SINK_BUILDERS, "sink_counts": sink_counts}
+    lock = threading.Lock()
+
+    def write_sink(sink_name: str) -> None:
+        dest = os.path.join(out_dir, sink_name)
+        w0 = time.monotonic()
+        rows, chash, lineage = write_with_summary(builders[sink_name](routed), dest)
+        entry = {
+            "status": "complete",
+            "rows": rows,
+            "content_hash": chash,
+            "path": dest,
+            "lineage": lineage,
+            "write_s": time.monotonic() - w0,
+        }
+        with lock:
+            manifest["sinks"][sink_name] = entry
+            save_manifest(out_dir, manifest)
+        if fail_after_sink == sink_name:
+            raise SinkFailure(f"injected failure after sink {sink_name}")
+
     try:
         t0 = time.monotonic()
-        builders = {**SINK_BUILDERS, "sink_counts": sink_counts}
-        for sink_name, builder in builders.items():
-            if sink_name not in pending:
-                continue
-            sink_df = builder(routed)
-            dest = os.path.join(out_dir, sink_name)
-            rows, chash, lineage = write_with_summary(sink_df, dest)
-            manifest["sinks"][sink_name] = {
-                "status": "complete",
-                "rows": rows,
-                "content_hash": chash,
-                "path": dest,
-                "lineage": lineage,
-            }
-            save_manifest(out_dir, manifest)
-            if fail_after_sink == sink_name:
-                raise SinkFailure(f"injected failure after sink {sink_name}")
+        # the first write fills the cache; the rest scan it concurrently.
+        # Leaving the pool's block waits for every write, failed or not, so
+        # the cache outlives all of them.
+        first, *rest = pending
+        write_sink(first)
+        if rest:
+            with ThreadPoolExecutor(max_workers=len(rest)) as pool:
+                # wrapped here, in the caller's thread, so each write runs
+                # under the caller's Spark local properties (job group, pool) and tags
+                inherit = inheritable_thread_target(spark)
+                futures = [pool.submit(inherit(write_sink), s) for s in rest]
+            for f in futures:
+                f.result()
         # routing is exclusive and exhaustive (trace|metric|log), so the input
         # row count is exactly the sum of the three sink row counts — no
         # separate count job over the routed frame

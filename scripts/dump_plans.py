@@ -50,7 +50,7 @@ def main() -> int:
     sections.append(
         (
             "Flagship pipeline (build_routed: scan -> codegen parse -> "
-            "ordering window [the ONLY shuffle] -> broadcast enrich -> route+attrs)",
+            "broadcast enrich -> route+attrs, no exchange)",
             formatted(routed),
         )
     )

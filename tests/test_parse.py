@@ -178,3 +178,47 @@ def test_native_pandas_agree_on_nonascii_word_boundaries(spark):
     one = _parse_one(spark, "INFOᤠ")
     assert one["severity"] == "INFO"
     assert one["message"] == "ᤠ"
+
+
+def _first_chars(items) -> set[str]:
+    """Characters a parsed (``re._parser``) pattern can start with; leading
+    zero-width assertions are skipped. Anything but a literal, a group or an
+    alternation in first position fails: a first-character guard cannot
+    cover a class or a repeat it does not enumerate."""
+    from re import _constants as c
+
+    for op, av in items:
+        if op in (c.ASSERT, c.ASSERT_NOT, c.AT):
+            continue
+        if op is c.LITERAL:
+            return {chr(av)}
+        if op is c.SUBPATTERN:
+            return _first_chars(av[-1])
+        if op is c.BRANCH:
+            return set().union(*(_first_chars(alt) for alt in av[1]))
+        raise AssertionError(f"an alternative opens with {op}, not a literal character")
+    raise AssertionError("empty alternative")
+
+
+@pytest.mark.parametrize("name", ["RE_SEV_TOK", "RE_MARKERS"])
+def test_first_char_guard_covers_every_alternative(name):
+    """RE_SEV_TOK and RE_MARKERS open with a lookahead on the characters
+    their alternatives start with (java.util.regex would otherwise try the
+    whole pattern at every offset). The guard must name exactly the first
+    characters of the alternatives that follow it: a marker whose first
+    character it misses would never match."""
+    from re import _constants as c
+    from re import _parser
+
+    from otel_kafka_pg_spark.functions import parse
+
+    items = list(_parser.parse(getattr(parse, name)))
+    op, av = items[0]
+    assert op is c.ASSERT and av[0] == 1, f"{name} must open with a lookahead"
+    [(in_op, members)] = list(av[1])
+    assert in_op is c.IN
+    allowed = set()
+    for kind, val in members:
+        assert kind is c.LITERAL, f"{name}'s guard must list characters, not ranges"
+        allowed.add(chr(val))
+    assert _first_chars(items[1:]) == allowed

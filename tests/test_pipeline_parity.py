@@ -90,6 +90,166 @@ def test_idempotent_resume_after_partial_failure(spark, transcripts_path, pipe_o
         assert resumed["sinks"][sink]["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
 
 
+def _finished_writes_only(spark, manifest):
+    """Every sink the manifest marks complete was written in full."""
+    import os
+
+    for sink, entry in manifest["sinks"].items():
+        assert entry["status"] == "complete", sink
+        assert os.path.exists(os.path.join(entry["path"], "_SUCCESS")), sink
+        assert spark.read.parquet(entry["path"]).count() == entry["rows"], sink
+
+
+def test_resume_after_failure_on_a_pooled_sink(spark, transcripts_path, pipe_out, tmp_path):
+    """fail_after_sink naming a sink written from the pool (not the serial
+    first one): the injected failure surfaces from run_pipeline, the
+    manifest holds metrics plus only sinks whose writes finished, and a
+    resume reproduces the full run's hashes."""
+    from otel_kafka_pg_spark.plans.manifest import load_manifest
+
+    _, manifest_full = pipe_out
+    out = str(tmp_path / "pooled")
+    with pytest.raises(SinkFailure):
+        run_pipeline(spark, transcripts_path, out, fail_after_sink="metrics")
+    partial = load_manifest(out)
+    assert {"traces", "metrics"} <= set(partial["sinks"])
+    _finished_writes_only(spark, partial)
+    resumed = run_pipeline(spark, transcripts_path, out)
+    for sink in ("traces", "logs", "metrics", "sink_counts"):
+        assert resumed["sinks"][sink]["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
+        assert resumed["sinks"][sink]["rows"] == manifest_full["sinks"][sink]["rows"], sink
+
+
+def test_pooled_sink_error_waits_for_running_writes(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
+    """A pooled sink whose builder raises makes run_pipeline raise; the
+    failed sink is absent from the manifest, and the routed frame's cache
+    is released only after every other write has ended."""
+    import threading
+    import time
+
+    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS
+    from otel_kafka_pg_spark.plans import pipeline
+    from otel_kafka_pg_spark.plans.manifest import load_manifest
+
+    _, manifest_full = pipe_out
+    lock, in_flight, at_unpersist = threading.Lock(), [0], []
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    real_write, real_unpersist = pipeline.write_with_summary, frame_cls.unpersist
+
+    def counting_write(df, dest):
+        with lock:
+            in_flight[0] += 1
+        try:
+            return real_write(df, dest)
+        finally:
+            with lock:
+                in_flight[0] -= 1
+
+    def broken_logs(_routed):
+        deadline = time.monotonic() + 30
+        while in_flight[0] < 2 and time.monotonic() < deadline:  # the other pooled writes are running
+            time.sleep(0.01)
+        raise RuntimeError("logs builder broke")
+
+    def spy_unpersist(self, *a, **kw):
+        at_unpersist.append(in_flight[0])
+        return real_unpersist(self, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "write_with_summary", counting_write)
+    monkeypatch.setitem(SINK_BUILDERS, "logs", broken_logs)
+    monkeypatch.setattr(frame_cls, "unpersist", spy_unpersist)
+    out = str(tmp_path / "broken")
+    with pytest.raises(RuntimeError, match="logs builder broke"):
+        pipeline.run_pipeline(spark, transcripts_path, out)
+    assert at_unpersist == [0], "the cache was released while a write was still running"
+    partial = load_manifest(out)
+    assert set(partial["sinks"]) == {"traces", "metrics", "sink_counts"}
+    _finished_writes_only(spark, partial)
+    for sink, entry in partial["sinks"].items():
+        assert entry["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
+
+
+def test_pooled_writes_inherit_the_job_group(spark, transcripts_path, tmp_path):
+    """Sink writes from the pool run under the caller's local properties:
+    every job of the run lands in the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("fanout-inherit", "pipeline under a job group")
+    try:
+        run_pipeline(spark, transcripts_path, str(tmp_path / "grouped"), resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
+    assert len(tracker.getJobIdsForGroup("fanout-inherit")) >= 4  # a write job per sink
+
+
+def test_concurrent_manifest_updates_lose_no_sink(spark, transcripts_path, tmp_path, monkeypatch):
+    """Stress the manifest lock: 24 stand-in sinks (more pool threads than
+    cores) whose writes all return at once, released by one barrier, under
+    a shortened switch interval and a jittered file replace. No save may
+    replace the manifest on disk
+    with one that lacks a sink the disk already holds — an older snapshot
+    landing after a newer one would lose a finished sink for a resume after
+    a crash — and the final manifest must hold them all."""
+    import json
+    import os
+    import random
+    import sys
+    import threading
+    import time
+
+    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS
+    from otel_kafka_pg_spark.plans import pipeline
+    from otel_kafka_pg_spark.plans.manifest import MANIFEST_NAME, load_manifest
+
+    extra = [f"stress{i:02d}" for i in range(24)]
+    for name in extra:
+        monkeypatch.setitem(SINK_BUILDERS, name, lambda routed: routed)
+    barrier = threading.Barrier(len(extra), timeout=60)
+
+    def stand_in_write(df, dest):
+        if os.path.basename(dest) in extra:
+            barrier.wait()
+        return 1, 0, []
+
+    monkeypatch.setattr(pipeline, "write_with_summary", stand_in_write)
+    real_replace, rng, lost = os.replace, random.Random(7), []
+
+    def sinks(path):
+        with open(path) as f:
+            return set(json.load(f)["sinks"])
+
+    def checked_replace(src, dst):
+        if str(dst).endswith(MANIFEST_NAME):
+            time.sleep(rng.random() * 0.002)
+            if os.path.exists(dst):
+                lost.extend(sinks(dst) - sinks(src))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", checked_replace)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        manifest = pipeline.run_pipeline(spark, transcripts_path, str(tmp_path / "stress"), resume=False)
+    finally:
+        sys.setswitchinterval(interval)
+    assert lost == [], "a save replaced the manifest with an older one"
+    expected = {"traces", "logs", "metrics", "sink_counts", *extra}
+    assert set(manifest["sinks"]) == expected
+    assert set(load_manifest(str(tmp_path / "stress"))["sinks"]) == expected
+
+
+def test_manifest_records_per_sink_write_time(pipe_out):
+    """Each sink entry carries write_s, the wall time of its write; with
+    the writes overlapping, their sum may exceed elapsed_sec but no one
+    write can."""
+    _, manifest = pipe_out
+    for sink, entry in manifest["sinks"].items():
+        assert 0 < entry["write_s"] <= manifest["elapsed_sec"], sink
+
+
 def test_resume_skips_completed_sinks(spark, transcripts_path, pipe_out):
     out, manifest = pipe_out
     again = run_pipeline(spark, transcripts_path, out)  # everything complete → no-op
@@ -132,9 +292,8 @@ def test_pipeline_survives_mega_conversation_skew(spark, tmp_path):
     """Stress the documented skew bound: the synth contract caps
     conversations at ~4k turns, but a real corpus can violate it. One
     conversation holding 50% of all turns (25k of 50k) must still route
-    correctly — the ordering window sorts it in ONE task (that is the
-    design: a conversation is the unit of ordering), so this pins that a
-    cap violation degrades to a slow task, not an error or wrong rows."""
+    correctly: no default stage groups by conversation, so a cap
+    violation must cost only its rows, never an error or wrong rows."""
     import pandas as pd
 
     from otel_kafka_pg_spark.plans.pipeline import run_pipeline

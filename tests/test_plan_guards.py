@@ -67,59 +67,105 @@ def test_topk_is_take_ordered_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_pipeline_default_has_single_shuffle(spark):
-    """The default flagship DAG's ONLY wide operation is the ordering
-    window's hash partitioning by conv_id (the enrich is broadcast; scan →
-    parse is narrow over size-balanced splits — the round-1 pre-parse
-    salted repartition doubled pre-parse IO for a stage that was already
-    balanced, measured and removed in round 2)."""
+def _routed(spark, **kw):
     from otel_kafka_pg_spark.plans.pipeline import build_routed
     from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
 
-    routed = build_routed(spark, spark.read.parquet(load_or_synth_transcripts(2000, seed=7)))
-    plan = _plan(routed)
+    return build_routed(spark, spark.read.parquet(load_or_synth_transcripts(2000, seed=7)), **kw)
+
+
+def test_pipeline_default_has_single_shuffle(spark):
+    """The default flagship DAG has NO exchange before the sinks: scan →
+    parse → broadcast enrich → classify → attributes is one narrow stage
+    over the size-balanced scan splits. The ordering window's shuffle by
+    conv_id computed a turn_seq no sink writes (sink IDs are
+    content-derived), so it is not in the DAG; the round-1 pre-parse salted
+    repartition stays an opt-in (salt_buckets>0). The only shuffle the
+    default pipeline runs is sink_counts' partial aggregate
+    (test_sink_plans_prune_the_ordering_window)."""
+    plan = _plan(_routed(spark))
     assert plan.count("BroadcastHashJoin") == 1
     assert "SortMergeJoin" not in plan
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, f"default plan must shuffle exactly once (window):\n{plan}"
+    assert "Window" not in plan, f"default plan must not order turns:\n{plan}"
+    assert "Exchange hashpartitioning" not in plan, f"default plan must not shuffle:\n{plan}"
 
 
 def test_sink_plans_prune_the_ordering_window(spark):
-    """The sinks are order-independent (content-derived IDs), so Catalyst
-    must PRUNE the ordering window — and with it the pipeline's only data
-    shuffle — from every un-persisted sink job (a single-sink resume runs
-    without the cache, so it never shuffles). The window still materializes
-    when run_pipeline caches the routed frame, where its exchange is
-    load-bearing as the cache's re-parallelizer (measured A/B in BENCH/BASELINE.md round 5:
-    keeping it beats dropping it AND beats a plain repartition)."""
-    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS, sink_counts
-    from otel_kafka_pg_spark.plans.pipeline import build_routed
-    from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
+    """The sinks are order-independent (content-derived IDs), so no sink
+    job runs a window or a data shuffle — on the un-persisted single-sink
+    resume path as on the cached fan-out, whose cache is the slim
+    SINK_COLUMNS projection of the same exchange-free DAG. sink_counts
+    keeps exactly its own partial-aggregate exchange."""
+    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS, SINK_COLUMNS, sink_counts
 
-    routed = build_routed(spark, spark.read.parquet(load_or_synth_transcripts(2000, seed=7)))
-    for name, builder in SINK_BUILDERS.items():
-        plan = _plan(builder(routed))
-        assert "Window" not in plan, f"{name} sink must not execute the window:\n{plan}"
-        assert "Exchange hashpartitioning" not in plan, name
-    counts_plan = _plan(sink_counts(routed))
-    assert "Window" not in counts_plan
-    # counts keep exactly their own partial-agg exchange, nothing else
-    assert counts_plan.count("Exchange hashpartitioning") == 1
+    routed = _routed(spark)
+    for frame in (routed, routed.select(*SINK_COLUMNS)):
+        for name, builder in SINK_BUILDERS.items():
+            plan = _plan(builder(frame))
+            assert "Window" not in plan, f"{name} sink must not execute a window:\n{plan}"
+            assert "Exchange hashpartitioning" not in plan, name
+        counts_plan = _plan(sink_counts(frame))
+        assert "Window" not in counts_plan
+        # counts keep exactly their own partial-agg exchange, nothing else
+        assert counts_plan.count("Exchange hashpartitioning") == 1
 
 
 def test_pipeline_salted_optin_adds_one_shuffle(spark):
-    """salt_buckets>0 (for skew-laid-out sources) adds exactly the salted
-    pre-parse exchange and nothing else."""
-    from otel_kafka_pg_spark.plans.pipeline import build_routed
+    """salt_buckets>0 (for few-split or skew-laid-out sources) adds exactly
+    the salted pre-parse exchange and nothing else."""
+    plan = _plan(_routed(spark, salt_buckets=16))
+    assert plan.count("BroadcastHashJoin") == 1
+    assert "Window" not in plan
+    n_exchanges = plan.count("Exchange hashpartitioning")
+    assert n_exchanges == 1, f"salted plan = the salted repartition only:\n{plan}"
+
+
+def test_sink_columns_are_what_the_sinks_read(spark):
+    """run_pipeline persists routed.select(*SINK_COLUMNS): every builder and
+    sink_counts must resolve against that projection, and each column must
+    be read by at least one of them (no dead weight in the cache)."""
+    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS, SINK_COLUMNS, sink_counts
+
+    routed = _routed(spark)
+    slim = routed.select(*SINK_COLUMNS)
+    assert slim.columns == list(SINK_COLUMNS)
+    assert {"text", "resource_attrs"} <= set(routed.columns) - set(SINK_COLUMNS)
+    read = set()
+    for builder in (*SINK_BUILDERS.values(), sink_counts):
+        builder(slim).schema  # analysis fails if the builder reads a dropped column
+        read |= {c for c in SINK_COLUMNS if _reads(builder, slim, c)}
+    assert read == set(SINK_COLUMNS)
+
+
+def _reads(builder, frame, col) -> bool:
+    """Whether ``builder(frame)`` fails to analyse once ``col`` is dropped."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        builder(frame.drop(col)).schema
+    except AnalysisException:
+        return True
+    return False
+
+
+def test_persisted_frame_is_sink_columns(spark, tmp_path, monkeypatch):
+    """The frame run_pipeline caches carries exactly SINK_COLUMNS — not the
+    raw text or the resource map."""
+    from otel_kafka_pg_spark.operators.route import SINK_COLUMNS
+    from otel_kafka_pg_spark.plans.pipeline import run_pipeline
     from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
 
-    routed = build_routed(
-        spark, spark.read.parquet(load_or_synth_transcripts(2000, seed=7)), salt_buckets=16
-    )
-    plan = _plan(routed)
-    assert plan.count("BroadcastHashJoin") == 1
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 2, f"salted plan = salted repartition + window:\n{plan}"
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    persisted = []
+    real_persist = frame_cls.persist
+
+    def spy(self, *a, **kw):
+        persisted.append(self.columns)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    run_pipeline(spark, load_or_synth_transcripts(2000, seed=7), str(tmp_path / "out"), resume=False)
+    assert persisted == [list(SINK_COLUMNS)]
 
 
 def test_parse_stays_in_wholestage_codegen(spark):
