@@ -18,16 +18,25 @@ DuckDB oracle SQL (driver contract).
 
 from __future__ import annotations
 
+import functools
+import operator
+from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # custom severity rank ladder — reference log repo:204-213 ORDER BY CASE
 SEVERITY_RANK_CASE = {"error": 1, "signup": 2, "purchase": 3, "click": 4, "view": 5}
 
 
-def severity_rank_col(col: str = "event_type"):
+# Request-independent Columns are built once per process: building one is a
+# chain of py4j calls (the rank ladder alone is ~180), paid on every request
+# otherwise. A Column is an unresolved expression, safe to share between plans.
+
+
+@functools.cache
+def severity_rank_col(col: str = "event_type") -> Column:
     rank = None
     for name, r in SEVERITY_RANK_CASE.items():
         cond = F.col(col) == name
@@ -51,27 +60,27 @@ class EventFilter:
 
 
 def build_event_filter(df: DataFrame, flt: EventFilter) -> DataFrame:
-    """The shared-WHERE builder — one filtered frame reused by page/agg/count."""
+    """The shared-WHERE builder — one filtered frame reused by page/agg/count.
+    The predicates go to ONE ``filter`` call as one conjunction."""
+    preds = []
     if flt.start_ts:
-        df = df.filter(F.col("ts") >= F.to_timestamp_ntz(F.lit(flt.start_ts)))
+        preds.append(F.col("ts") >= F.to_timestamp_ntz(F.lit(flt.start_ts)))
     if flt.end_ts:
-        df = df.filter(F.col("ts") <= F.to_timestamp_ntz(F.lit(flt.end_ts)))
+        preds.append(F.col("ts") <= F.to_timestamp_ntz(F.lit(flt.end_ts)))
     if flt.types_in:
-        df = df.filter(F.col("event_type").isin(flt.types_in))
+        preds.append(F.col("event_type").isin(flt.types_in))
     if flt.type_eq is not None:
-        df = df.filter(F.col("event_type") == flt.type_eq)
+        preds.append(F.col("event_type") == flt.type_eq)
     if flt.require_props:
-        df = df.filter(F.col("props").isNotNull() & (F.col("props") != ""))
+        preds.append(F.col("props").isNotNull() & (F.col("props") != ""))
     if flt.min_value is not None:
-        df = df.filter(F.col("value") >= flt.min_value)
+        preds.append(F.col("value") >= flt.min_value)
     if flt.max_value is not None:
-        df = df.filter(F.col("value") <= flt.max_value)
+        preds.append(F.col("value") <= flt.max_value)
     if flt.search and flt.search != "*":  # the "*"-skip quirk, log repo:145
         q = flt.search.lower()
-        df = df.filter(
-            F.lower(F.col("props")).contains(q) | F.lower(F.col("event_type")).contains(q)
-        )
-    return df
+        preds.append(F.lower(F.col("props")).contains(q) | F.lower(F.col("event_type")).contains(q))
+    return df.filter(functools.reduce(operator.and_, preds)) if preds else df
 
 
 # --- sorts / pagination (O1–O3) --------------------------------------------
@@ -79,6 +88,11 @@ def build_event_filter(df: DataFrame, flt: EventFilter) -> DataFrame:
 # dynamic sort whitelist — reference trace repo:225-251 maps client field →
 # column and rejects anything else
 SORT_WHITELIST = {"time": "ts", "value": "value", "id": "event_id"}
+
+
+@functools.cache
+def _page_order(col: str, descending: bool) -> tuple[Column, Column]:
+    return (F.col(col).desc() if descending else F.col(col).asc()), F.col("event_id").asc()
 
 
 def page_events(
@@ -90,9 +104,7 @@ def page_events(
 ) -> DataFrame:
     """O1/O2/O3: whitelisted dynamic sort + limit/offset page. event_id is
     always the final tiebreaker so pages are deterministic under ties."""
-    col = SORT_WHITELIST.get(sort_field, "ts")
-    primary = F.col(col).desc() if descending else F.col(col).asc()
-    out = df.orderBy(primary, F.col("event_id").asc())
+    out = df.orderBy(*_page_order(SORT_WHITELIST.get(sort_field, "ts"), descending))
     # offset is client-controlled in the request analog: clamp like limit
     # (reference clamps bad paging params to defaults, never errors) — a
     # negative value would fail Spark's analysis check and kill the request
@@ -104,29 +116,37 @@ def page_events(
 # --- aggregations (A1–A9) ---------------------------------------------------
 
 
+@functools.cache
+def _count_as(name: str) -> Column:
+    return F.count(F.lit(1)).alias(name)
+
+
+@functools.cache
+def _service_order() -> tuple[Column, Column]:
+    return F.desc("cnt"), F.col("event_type")
+
+
 def service_counts(df: DataFrame, k: int = 20) -> DataFrame:
     """A1: GROUP BY service ORDER BY count DESC LIMIT k (log repo:178-191)."""
-    return (
-        df.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), "event_type")
-        .limit(k)
-    )
+    return df.groupBy("event_type").agg(_count_as("cnt")).orderBy(*_service_order()).limit(k)
 
 
 def severity_counts_ranked(df: DataFrame) -> DataFrame:
-    """A2: GROUP BY severity with the CASE rank ladder (log repo:194-214)."""
+    """A2: GROUP BY severity with the CASE rank ladder (log repo:194-214).
+    The aggregate has at most one row per type, so it is sorted in ONE
+    partition: no range-partition sampling job, no second shuffle."""
     return (
         df.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(_count_as("cnt"))
         .withColumn("sev_rank", severity_rank_col())
+        .coalesce(1)
         .orderBy("sev_rank")
     )
 
 
 def total_count(df: DataFrame) -> DataFrame:
     """A3: COUNT(*) over the same shared filter (log repo:217-221)."""
-    return df.agg(F.count(F.lit(1)).alias("total"))
+    return df.agg(_count_as("total"))
 
 
 def trace_groups(orders: DataFrame, k: int = 100) -> DataFrame:
@@ -237,6 +257,26 @@ def clamp_limit(requested: int, default: int = 20, maximum: int = 100) -> int:
     return min(requested, maximum)
 
 
+class _Statements(Mapping):
+    """Read-only name → DataFrame mapping that builds each statement the
+    first time its key is read, then returns that same frame."""
+
+    def __init__(self, builders: dict[str, Callable[[], DataFrame]]):
+        self._builders = builders
+        self._built: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._built:
+            self._built[name] = self._builders[name]()
+        return self._built[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._builders)
+
+    def __len__(self) -> int:
+        return len(self._builders)
+
+
 def query_events(
     df: DataFrame,
     flt: EventFilter,
@@ -244,19 +284,21 @@ def query_events(
     descending: bool = True,
     limit: int = 0,
     offset: int = 0,
-) -> dict[str, DataFrame]:
+) -> Mapping[str, DataFrame]:
     """One request, four statements sharing ONE filter — the exact shape of
     repo.QueryLogs (log repo:155-221: page, service agg, severity agg,
-    count, all over the same WHERE). The filtered frame is built once; each
-    terminal op is a separate lazy plan over it, so Catalyst still pushes
-    the shared predicates into every scan."""
+    count, all over the same WHERE). The filtered frame is built once per
+    call; each statement is a separate lazy plan over it, built only when
+    its key is first read (a request served one statement at a time pays
+    for one), so Catalyst still pushes the shared predicates into every
+    scan. Keys, in order: page, service_counts, severity_counts, total."""
     f = build_event_filter(df, flt)
-    return {
-        "page": page_events(f, sort_field, descending, clamp_limit(limit), offset),
-        "service_counts": service_counts(f),
-        "severity_counts": severity_counts_ranked(f),
-        "total": total_count(f),
-    }
+    return _Statements({
+        "page": lambda: page_events(f, sort_field, descending, clamp_limit(limit), offset),
+        "service_counts": lambda: service_counts(f),
+        "severity_counts": lambda: severity_counts_ranked(f),
+        "total": lambda: total_count(f),
+    })
 
 
 # --- joins (J1–J3) -----------------------------------------------------------

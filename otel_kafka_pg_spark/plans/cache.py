@@ -3,28 +3,29 @@ cache (reference: modules/api/middleware/cache.go:38-120 middleware flow,
 :125-169 key scheme, cache key = ``api:cache:<path>:<sha256(sorted query
 params + body)[:16]>``).
 
-The reference caches serialized HTTP responses in Redis with a TTL and
-serves repeat GETs from the cache. The Spark-native equivalent of "the
-same query served without recomputation" is a persisted DataFrame keyed
-by the canonical request descriptor:
+The reference caches the rendered HTTP body in Redis with a TTL and answers
+a repeat GET from it without running a query. An entry here is likewise
+the collected result, not a plan to run again:
 
 - **key**: ``cache:<name>:<sha256(canonical-JSON descriptor)[:16]>`` —
   sorted-key JSON exactly like the reference sorts query params before
   hashing, so two requests that differ only in parameter order share one
   entry.
-- **hit**: the cached (already materialized) DataFrame is returned; Spark
-  serves downstream actions from the in-memory columnar blocks
-  (``InMemoryTableScan`` — no source scan job runs, the analog of Redis
-  returning the serialized body).
+- **miss**: the built plan runs once (``collectAsList`` — one action) and
+  its rows become a local DataFrame with the plan's exact schema; the rows
+  stay in the JVM and never pass through Python, so types and nullability
+  are the plan's own. This is the write-through the reference does after
+  a 2xx response (cache.go:101-116).
+- **hit**: the entry is a ``LocalRelation``, so actions on it run a
+  ``LocalTableScan`` on the driver: no Spark job, no source scan — the
+  analog of Redis returning the stored body.
 - **TTL / invalidation**: entries expire after ``ttl_s`` of wall clock and
   can be invalidated by key prefix (the reference's cache.Delete on
-  writes); both unpersist the blocks.
+  writes); either just drops the reference.
 
-At 100 TB the same pattern holds per-executor-memory budget: persist with
-``StorageLevel.MEMORY_AND_DISK`` (the default) so hot result sets spill
-instead of evicting, and keep cached frames SMALL (post-aggregation
-results, not raw scans) — exactly like the reference caches rendered JSON
-pages, never table rows.
+Entries live in driver memory, so cache SMALL results (post-aggregation
+rows, pages) — exactly like the reference caches rendered JSON pages,
+never table rows.
 """
 
 from __future__ import annotations
@@ -61,59 +62,46 @@ class ResultCache:
     misses: int = 0
 
     def get_or_build(self, name: str, descriptor: dict, build) -> tuple[DataFrame, bool]:
-        """Return (DataFrame, was_hit). On miss, ``build()`` is called once,
-        the result is persisted AND materialized (count) so every later
-        action — including from other requests — reads cached blocks, the
-        write-through the reference does after a 2xx response
-        (cache.go:101-116).
+        """Return (DataFrame, was_hit). On miss, ``build()`` is called once
+        and its plan collected; the entry is a local DataFrame over those
+        rows, so every later action on it — including from other requests —
+        runs no Spark job. A build or collect that raises stores nothing.
 
         Every call also opportunistically purges ALL expired entries (not
         just the requested key), so a long-lived cache never accumulates
-        persisted-DataFrame references for keys that are never re-requested
-        — Redis's lazy+active expiry, collapsed to expiry-on-traffic."""
+        results for keys that are never re-requested — Redis's lazy+active
+        expiry, collapsed to expiry-on-traffic."""
         key = cache_key(name, descriptor)
-        now = time.monotonic()
-        self._purge_expired(now)
+        self._purge_expired(time.monotonic())
         ent = self._entries.get(key)
         if ent is not None:
             self.hits += 1
             return ent.df, True
         self.misses += 1
-        df = build().persist()
-        try:
-            df.count()
-        except Exception:
-            # a failed materialization must not strand persisted blocks the
-            # cache no longer references (they'd outlive every purge path)
-            _safe_unpersist(df)
-            raise
-        # TTL starts at MATERIALIZATION, not at miss time: a build taking
+        df = _collected(build())
+        # TTL starts once the result exists, not at miss time: a build taking
         # close to ttl_s would otherwise insert an already-(nearly-)expired
         # entry and degrade the cache to a rebuild-per-request
         self._entries[key] = _Entry(df, time.monotonic() + self.ttl_s)
         return df, False
 
-    def _purge_expired(self, now: float) -> int:
-        expired = [k for k, e in self._entries.items() if now >= e.expires_at]
-        for k in expired:
-            _safe_unpersist(self._entries.pop(k).df)
-        return len(expired)
+    def _purge_expired(self, now: float) -> None:
+        for k in [k for k, e in self._entries.items() if now >= e.expires_at]:
+            del self._entries[k]
 
     def invalidate(self, prefix: str = "cache:") -> int:
-        """Unpersist and drop every entry whose key starts with ``prefix``
-        (``cache:<name>:`` invalidates one request family — the reference's
-        delete-on-write path). Returns the number of entries dropped."""
+        """Drop every entry whose key starts with ``prefix`` (``cache:<name>:``
+        invalidates one request family — the reference's delete-on-write
+        path). Returns the number of entries dropped."""
         doomed = [k for k in self._entries if k.startswith(prefix)]
         for k in doomed:
-            _safe_unpersist(self._entries.pop(k).df)
+            del self._entries[k]
         return len(doomed)
 
 
-def _safe_unpersist(df: DataFrame) -> None:
-    """unpersist() on a frame bound to a stopped SparkContext raises — for a
-    module-level cache outliving test sessions that just means the blocks
-    are already gone, so dropping the reference is the whole job."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+def _collected(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local DataFrame: one action, and the rows go from
+    the collect straight into a ``LocalRelation`` inside the JVM."""
+    jdf = df._jdf
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark)

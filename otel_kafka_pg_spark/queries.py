@@ -347,12 +347,12 @@ _C3_CACHE = _ResultCache()
 )
 def c3_cached_result_reuse(spark, sf_dir):
     # two identical requests through the keyed result cache: the first call
-    # in a session materializes + persists, later requests are served from
-    # cached blocks (InMemoryTableScan, no new source scan — asserted in
-    # tests/test_cache.py). The cache is MODULE-level (one long-lived
-    # service instance, like the reference's Redis), so repeated
-    # invocations of this entry reuse ONE persisted frame instead of
-    # accumulating orphaned InMemoryRelations per call.
+    # in a session collects the result once, later requests are served from
+    # those rows (a LocalTableScan that runs no Spark job and no source scan
+    # — asserted in tests/test_cache.py). The cache is MODULE-level (one
+    # long-lived service instance, like the reference's Redis), so repeated
+    # invocations of this entry reuse ONE collected result instead of
+    # recomputing it per call.
     # sf_dir AND the session identity are part of the request key: two data
     # roots must not cross-serve, and a recreated SparkSession must not be
     # handed a DataFrame bound to a stopped/foreign context

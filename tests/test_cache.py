@@ -1,9 +1,10 @@
 """Result-cache analog tests (reference middleware/cache.go:38-169): keyed
-reuse, canonical key scheme, cache-hit plan (no new source scan), TTL
-expiry, prefix invalidation."""
+reuse, canonical key scheme, cache-hit plan (no source scan, no Spark job),
+failed builds, TTL expiry, prefix invalidation."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from otel_kafka_pg_spark.plans.cache import ResultCache, cache_key
@@ -28,18 +29,55 @@ def test_key_is_param_order_insensitive():
     assert cache_key("q", {"x": 2, "y": [2, 3]}) != a
 
 
+def _jobs_run_by(spark, group: str, fn) -> tuple[object, int]:
+    """(fn(), number of Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_second_request_served_from_cache(spark, sf_dir):
     calls = []
     cache = ResultCache()
     build = _build_fn(spark, sf_dir, calls)
-    df1, hit1 = cache.get_or_build("svc", {"k": 1}, build)
+    (df1, hit1), miss_jobs = _jobs_run_by(spark, "cache-miss", lambda: cache.get_or_build("svc", {"k": 1}, build))
     df2, hit2 = cache.get_or_build("svc", {"k": 1}, build)
     assert (not hit1) and hit2
     assert len(calls) == 1  # build ran once — the reference's cache-hit path
-    # the hit's plan reads in-memory blocks, not the parquet source
+    assert miss_jobs >= 1  # the miss collected the plan (and the counter sees jobs)
+    # the hit's plan is the collected rows, not the parquet source
     plan = df2._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-    assert df1.collect() == df2.collect()
+    assert "LocalTableScan" in plan and "FileScan" not in plan
+    rows, hit_jobs = _jobs_run_by(spark, "cache-hit", df2.collect)
+    assert hit_jobs == 0  # a hit is answered without running a Spark job
+    expected = build().collect()
+    assert sorted(rows) == sorted(expected)
+    assert df2.schema == build().schema  # exact types and nullability
+    cache.invalidate()
+
+
+def test_failed_build_stores_nothing(spark, sf_dir):
+    calls = []
+    cache = ResultCache()
+
+    def bad_build():
+        calls.append(1)
+        return spark.read.parquet(f"{sf_dir}/events.parquet").selectExpr(
+            "assert_true(event_id < 0, 'planted failure') AS x"
+        )
+
+    with pytest.raises(Exception, match="planted failure"):
+        cache.get_or_build("svc", {"k": 1}, bad_build)
+    assert cache.invalidate() == 0  # nothing was stored
+    good = _build_fn(spark, sf_dir, calls)
+    _, hit = cache.get_or_build("svc", {"k": 1}, good)
+    assert not hit and len(calls) == 2  # the next call rebuilds
     cache.invalidate()
 
 
