@@ -4,7 +4,11 @@ The reference builds ONE WHERE clause per request and shares it across the
 page query, the aggregation queries, and the count query (reference:
 modules/log/repository/repository.go:115-152,
 modules/trace/repository/repository.go:221-301). We mirror that shape: a
-filter builder returns a filtered DataFrame reused by page / aggs / count.
+filter builder returns a filtered DataFrame, the page is a lazy plan over
+it, and the service / severity / total statements (A1–A3) are all derived
+from ONE per-type count over it (the count pass): one action collects
+``GROUP BY event_type`` and the driver orders, ranks and sums its few rows
+into local frames whose actions run no Spark job.
 
 Filters F1–F9, aggregations A1–A9, sorts O1–O5 from SURVEY.md §2 are mapped
 onto the driver testdata analogs:
@@ -18,30 +22,26 @@ DuckDB oracle SQL (driver contract).
 
 from __future__ import annotations
 
+import copy
 import functools
 import operator
+import threading
+import weakref
 from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-# custom severity rank ladder — reference log repo:204-213 ORDER BY CASE
+# custom severity rank ladder — reference log repo:204-213 ORDER BY CASE;
+# any other type (NULL included) ranks 6
 SEVERITY_RANK_CASE = {"error": 1, "signup": 2, "purchase": 3, "click": 4, "view": 5}
 
-
 # Request-independent Columns are built once per process: building one is a
-# chain of py4j calls (the rank ladder alone is ~180), paid on every request
-# otherwise. A Column is an unresolved expression, safe to share between plans.
-
-
-@functools.cache
-def severity_rank_col(col: str = "event_type") -> Column:
-    rank = None
-    for name, r in SEVERITY_RANK_CASE.items():
-        cond = F.col(col) == name
-        rank = F.when(cond, r) if rank is None else rank.when(cond, r)
-    return rank.otherwise(6)
+# chain of py4j calls, paid on every request otherwise. A Column is an
+# unresolved expression, safe to share between plans.
 
 
 @dataclass
@@ -121,32 +121,79 @@ def _count_as(name: str) -> Column:
     return F.count(F.lit(1)).alias(name)
 
 
-@functools.cache
-def _service_order() -> tuple[Column, Column]:
-    return F.desc("cnt"), F.col("event_type")
+@dataclass(frozen=True)
+class TypeCounts:
+    """One collected count pass: the aggregate's (event_type, cnt) fields as
+    the plan types them, and its rows — at most one per type."""
+
+    fields: tuple[StructField, ...]
+    rows: tuple[tuple, ...]
+
+
+def type_count_plan(df: DataFrame) -> DataFrame:
+    """The count pass: GROUP BY event_type, COUNT(*) — one partial + final
+    aggregate, no sort. A1–A3 are all functions of its rows."""
+    return df.groupBy("event_type").agg(_count_as("cnt"))
+
+
+def count_pass(df: DataFrame) -> TypeCounts:
+    """Run the count pass over ``df``: one action."""
+    plan = type_count_plan(df)
+    return TypeCounts(tuple(plan.schema.fields), tuple(tuple(r) for r in plan.collect()))
+
+
+_SEV_RANK = StructField("sev_rank", IntegerType(), False)
+_TOTAL = StructType([StructField("total", LongType(), False)])
+
+
+def _nulls_first(t) -> tuple:
+    # Spark's ascending order puts NULL first
+    return (t is not None, t or "")
+
+
+def _local(spark: SparkSession, schema: StructType, rows: list[tuple]) -> DataFrame:
+    """``rows`` as a frame of exactly ``schema``: one Arrow table becomes a
+    ``LocalRelation``, whose actions run no Spark job."""
+    cols = list(zip(*rows)) if rows else [[] for _ in schema.names]
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, cols))), schema)
+
+
+# The ONE ordering implementation of the count statements: every caller
+# (query_events and the public A1–A3 functions) derives through these.
+
+
+def _service_frame(spark: SparkSession, counts: TypeCounts, k: int) -> DataFrame:
+    rows = sorted(counts.rows, key=lambda r: (-r[1], *_nulls_first(r[0])))
+    return _local(spark, StructType(list(counts.fields)), rows[:k])
+
+
+def _severity_frame(spark: SparkSession, counts: TypeCounts) -> DataFrame:
+    ranked = [(t, c, SEVERITY_RANK_CASE.get(t, 6)) for t, c in counts.rows]
+    ranked.sort(key=lambda r: (r[2], *_nulls_first(r[0])))
+    return _local(spark, StructType([*counts.fields, _SEV_RANK]), ranked)
+
+
+def _total_frame(spark: SparkSession, counts: TypeCounts) -> DataFrame:
+    return _local(spark, _TOTAL, [(sum(c for _, c in counts.rows),)])
 
 
 def service_counts(df: DataFrame, k: int = 20) -> DataFrame:
-    """A1: GROUP BY service ORDER BY count DESC LIMIT k (log repo:178-191)."""
-    return df.groupBy("event_type").agg(_count_as("cnt")).orderBy(*_service_order()).limit(k)
+    """A1: GROUP BY service ORDER BY count DESC, service LIMIT k (log
+    repo:178-191) — a local frame derived from one count pass."""
+    return _service_frame(df.sparkSession, count_pass(df), k)
 
 
 def severity_counts_ranked(df: DataFrame) -> DataFrame:
-    """A2: GROUP BY severity with the CASE rank ladder (log repo:194-214).
-    The aggregate has at most one row per type, so it is sorted in ONE
-    partition: no range-partition sampling job, no second shuffle."""
-    return (
-        df.groupBy("event_type")
-        .agg(_count_as("cnt"))
-        .withColumn("sev_rank", severity_rank_col())
-        .coalesce(1)
-        .orderBy("sev_rank")
-    )
+    """A2: GROUP BY severity with the CASE rank ladder (log repo:194-214),
+    ordered by ``sev_rank`` then type — a local frame derived from one count
+    pass."""
+    return _severity_frame(df.sparkSession, count_pass(df))
 
 
 def total_count(df: DataFrame) -> DataFrame:
-    """A3: COUNT(*) over the same shared filter (log repo:217-221)."""
-    return df.agg(_count_as("total"))
+    """A3: COUNT(*) over the same shared filter (log repo:217-221) — the sum
+    of one count pass, 0 when nothing matches."""
+    return _total_frame(df.sparkSession, count_pass(df))
 
 
 def trace_groups(orders: DataFrame, k: int = 100) -> DataFrame:
@@ -208,15 +255,23 @@ def service_stats(lineitem: DataFrame) -> DataFrame:
 
 def service_metrics_percentiles(lineitem: DataFrame, k: int = 50) -> DataFrame:
     """A7: A6 + exact interpolating p95/p99 (PERCENTILE_CONT, trace
-    repo:553-570). Exact ``F.percentile`` for oracle parity; at 10^12-row
+    repo:553-570), both from one ``F.percentile`` over an array of
+    percentages. Exact ``F.percentile`` for oracle parity; at 10^12-row
     scale swap for ``percentile_approx`` (documented in BENCH)."""
     return (
         lineitem.groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.round(F.avg("l_extendedprice"), 3).alias("avg_duration"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.95)), 3).alias("p95"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.99)), 3).alias("p99"),
+            # one aggregate sorts each group's values once for both points
+            F.percentile("l_extendedprice", [0.95, 0.99]).alias("_p"),
+        )
+        .select(
+            "l_returnflag",
+            "cnt",
+            "avg_duration",
+            F.round(F.col("_p")[0], 3).alias("p95"),
+            F.round(F.col("_p")[1], 3).alias("p99"),
         )
         .orderBy("l_returnflag")
         .limit(k)
@@ -277,6 +332,33 @@ class _Statements(Mapping):
         return len(self._builders)
 
 
+# table frame → (filter, its count pass): the latest count pass per live
+# frame. A frame's file listing is fixed when it is created, so a remembered
+# count equals a recount over the same frame; the entry dies with the frame.
+_COUNTS: weakref.WeakKeyDictionary[DataFrame, tuple[EventFilter, TypeCounts]] = (
+    weakref.WeakKeyDictionary()
+)
+_COUNTS_LOCK = threading.Lock()
+
+
+def _request_counts(df: DataFrame, flt: EventFilter, filtered: Callable[[], DataFrame]) -> TypeCounts:
+    with _COUNTS_LOCK:
+        seen = _COUNTS.get(df)
+    if seen is not None and seen[0] == flt:
+        return seen[1]
+    counts = count_pass(filtered())  # outside the lock: concurrent misses both count
+    with _COUNTS_LOCK:
+        _COUNTS[df] = (copy.deepcopy(flt), counts)
+    return counts
+
+
+def forget_counts() -> None:
+    """Drop every remembered count pass (``ResultCache.invalidate`` calls
+    this, so an invalidated request recounts)."""
+    with _COUNTS_LOCK:
+        _COUNTS.clear()
+
+
 def query_events(
     df: DataFrame,
     flt: EventFilter,
@@ -287,17 +369,24 @@ def query_events(
 ) -> Mapping[str, DataFrame]:
     """One request, four statements sharing ONE filter — the exact shape of
     repo.QueryLogs (log repo:155-221: page, service agg, severity agg,
-    count, all over the same WHERE). The filtered frame is built once per
-    call; each statement is a separate lazy plan over it, built only when
-    its key is first read (a request served one statement at a time pays
-    for one), so Catalyst still pushes the shared predicates into every
-    scan. Keys, in order: page, service_counts, severity_counts, total."""
-    f = build_event_filter(df, flt)
+    count, all over the same WHERE). Keys, in order: page, service_counts,
+    severity_counts, total; each statement is built when its key is first
+    read.
+
+    The page is a lazy plan over the filtered frame. The other three are
+    local frames derived from one count pass, remembered per table frame
+    ``df`` and filter value (not sort or paging), so the three statements —
+    read through one call or through one call each, as a per-statement
+    handler does — scan ``df`` once between them. The filtered frame is
+    built only when the page or a count-pass miss needs it."""
+    filtered = functools.cache(lambda: build_event_filter(df, flt))
+    counts = functools.cache(lambda: _request_counts(df, flt, filtered))
+    spark = df.sparkSession
     return _Statements({
-        "page": lambda: page_events(f, sort_field, descending, clamp_limit(limit), offset),
-        "service_counts": lambda: service_counts(f),
-        "severity_counts": lambda: severity_counts_ranked(f),
-        "total": lambda: total_count(f),
+        "page": lambda: page_events(filtered(), sort_field, descending, clamp_limit(limit), offset),
+        "service_counts": lambda: _service_frame(spark, counts(), 20),
+        "severity_counts": lambda: _severity_frame(spark, counts()),
+        "total": lambda: _total_frame(spark, counts()),
     })
 
 

@@ -21,7 +21,10 @@ the collected result, not a plan to run again:
   analog of Redis returning the stored body.
 - **TTL / invalidation**: entries expire after ``ttl_s`` of wall clock and
   can be invalidated by key prefix (the reference's cache.Delete on
-  writes); either just drops the reference.
+  writes); either just drops the reference. ``invalidate`` also drops the
+  log requests' remembered count passes (``aggregate.forget_counts``).
+- **concurrency**: one lock guards the entry map; builds run outside it,
+  so two concurrent misses on one key both build and the last one stays.
 
 Entries live in driver memory, so cache SMALL results (post-aggregation
 rows, pages) — exactly like the reference caches rendered JSON pages,
@@ -32,10 +35,13 @@ from __future__ import annotations
 
 import hashlib
 import json
+import threading
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+
+from ..operators.aggregate import forget_counts
 
 
 def cache_key(name: str, descriptor: dict) -> str:
@@ -58,6 +64,7 @@ class ResultCache:
 
     ttl_s: float = 300.0
     _entries: dict[str, _Entry] = field(default_factory=dict)
+    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
     hits: int = 0
     misses: int = 0
 
@@ -72,30 +79,36 @@ class ResultCache:
         results for keys that are never re-requested — Redis's lazy+active
         expiry, collapsed to expiry-on-traffic."""
         key = cache_key(name, descriptor)
-        self._purge_expired(time.monotonic())
-        ent = self._entries.get(key)
-        if ent is not None:
-            self.hits += 1
-            return ent.df, True
-        self.misses += 1
+        with self._lock:
+            self._purge_expired(time.monotonic())
+            ent = self._entries.get(key)
+            if ent is not None:
+                self.hits += 1
+                return ent.df, True
+            self.misses += 1
         df = _collected(build())
         # TTL starts once the result exists, not at miss time: a build taking
         # close to ttl_s would otherwise insert an already-(nearly-)expired
         # entry and degrade the cache to a rebuild-per-request
-        self._entries[key] = _Entry(df, time.monotonic() + self.ttl_s)
+        with self._lock:
+            self._entries[key] = _Entry(df, time.monotonic() + self.ttl_s)
         return df, False
 
     def _purge_expired(self, now: float) -> None:
+        # caller holds the lock
         for k in [k for k, e in self._entries.items() if now >= e.expires_at]:
-            del self._entries[k]
+            self._entries.pop(k, None)
 
     def invalidate(self, prefix: str = "cache:") -> int:
         """Drop every entry whose key starts with ``prefix`` (``cache:<name>:``
         invalidates one request family — the reference's delete-on-write
-        path). Returns the number of entries dropped."""
-        doomed = [k for k in self._entries if k.startswith(prefix)]
-        for k in doomed:
-            del self._entries[k]
+        path), and every remembered count pass. Returns the number of
+        entries dropped."""
+        with self._lock:
+            doomed = [k for k in self._entries if k.startswith(prefix)]
+            for k in doomed:
+                self._entries.pop(k, None)
+        forget_counts()
         return len(doomed)
 
 

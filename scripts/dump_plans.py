@@ -18,7 +18,7 @@ SF = "/root/testdata/sf0.01"
 SHOWCASE = [
     ("tpch_q1", "pushdown + partial agg + tiny shuffle"),
     ("j3_broadcast_enrich", "two broadcast hash joins, no SMJ"),
-    ("a7_service_metrics_percentiles", "exact percentiles (oracle); a7b is the sketch variant"),
+    ("a7_service_metrics_percentiles", "exact p95+p99 from one percentile aggregate (oracle); a7b: sketch"),
     ("o2_dynamic_sort_whitelist", "TakeOrderedAndProject, no global sort"),
     ("dd1_exact_dedup", "single hash shuffle on the fingerprint"),
     ("a5_trace_reassembly", "ordered span list rides the same single groupBy shuffle"),
@@ -52,6 +52,21 @@ def main() -> int:
             "Flagship pipeline (build_routed: scan -> codegen parse -> "
             "broadcast enrich -> route+attrs, no exchange)",
             formatted(routed),
+        )
+    )
+    # A log request's count pass: the one aggregate that the service,
+    # severity and total statements (a1-a3, query_events) are derived from on
+    # the driver — those statements are local frames, so their own plans show
+    # only a LocalTableScan.
+    from otel_kafka_pg_spark.operators.aggregate import EventFilter, build_event_filter, type_count_plan
+
+    events = spark.read.parquet(os.path.join(SF, "events.parquet"))
+    flt = EventFilter(types_in=["click", "view"], min_value=5.0)
+    sections.append(
+        (
+            "log request count pass (type_count_plan) — one partial+final aggregate, "
+            "no sort exchange; service/severity/total derive from its rows",
+            formatted(type_count_plan(build_event_filter(events, flt))),
         )
     )
     qs = registry.all_queries()

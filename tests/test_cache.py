@@ -1,12 +1,16 @@
 """Result-cache analog tests (reference middleware/cache.go:38-169): keyed
 reuse, canonical key scheme, cache-hit plan (no source scan, no Spark job),
-failed builds, TTL expiry, prefix invalidation."""
+failed builds, TTL expiry, prefix invalidation, concurrent requests."""
 
 from __future__ import annotations
+
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from otel_kafka_pg_spark.plans import cache as cache_mod
 from otel_kafka_pg_spark.plans.cache import ResultCache, cache_key
 
 
@@ -102,3 +106,36 @@ def test_prefix_invalidation(spark, sf_dir):
     _, hit = cache.get_or_build("other", {"k": 1}, build)
     assert hit  # untouched family still cached
     assert cache.invalidate() == 1
+
+
+def test_concurrent_requests_with_expiring_entries(monkeypatch):
+    # Spark-free: the collect is stubbed, so only the entry map is exercised.
+    # Tiny TTL + a tiny switch interval make threads purge, insert and
+    # invalidate while others iterate the same map.
+    monkeypatch.setattr(cache_mod, "_collected", lambda df: df)
+    cache = ResultCache(ttl_s=5e-4)
+    n_threads, n_calls = 8, 2000
+    errors = []
+
+    def client(t):
+        try:
+            for i in range(n_calls):
+                cache.get_or_build("svc", {"k": (t * 7919 + i) % 500}, lambda: object())
+                if i % 997 == 0:
+                    cache.invalidate("cache:svc:")
+        except Exception as e:  # noqa: BLE001 — any failure is the finding
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert cache.hits + cache.misses == n_threads * n_calls  # no lost count
