@@ -23,8 +23,8 @@ from otel_kafka_pg_spark import queries as registry  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: adapt sf0.001 events into the transcript shape, run the full
-    pipeline transform DAG (salted repartition → parse → ordering window →
-    broadcast enrich → route), and aggregate severity × signal counts with
+    pipeline transform DAG (parse → broadcast enrich → route → attributes),
+    and aggregate severity × signal counts with
     the reference's severity rank ordering (log repo:194-214)."""
     from otel_kafka_pg_spark.plans.pipeline import build_routed
     from otel_kafka_pg_spark.schemas import SEVERITY_RANK

@@ -7,7 +7,7 @@ Cluster usage (the north-rule shipping shape)::
     spark-submit --py-files engine.zip jobs/pipeline.py \
         --input  <iceberg-or-parquet path of transcripts> \
         --output <sink root> \
-        [--parse-impl native|pandas] [--salt-buckets 64] [--no-resume]
+        [--salt-buckets 64] [--no-resume]
 
 Local smoke (synthesizes input if --input omitted)::
 
@@ -34,7 +34,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", default=None, help="transcripts parquet path (default: synthesize 60k turns)")
     ap.add_argument("--output", required=True, help="sink root directory")
-    ap.add_argument("--parse-impl", choices=["native", "pandas"], default="native")
     ap.add_argument("--salt-buckets", type=int, default=0,
                     help="0 = no pre-parse shuffle (default; scan splits are balanced); "
                          ">0 only for skew-laid-out sources")
@@ -70,7 +69,6 @@ def main() -> int:
         spark,
         input_path,
         args.output,
-        parse_impl=args.parse_impl,
         salt_buckets=args.salt_buckets,
         resume=not args.no_resume,
     )

@@ -6,22 +6,20 @@ modules/kafka/processor/processor.go:58-86 traces, :155-183 logs, flatten
 :89-152/:186-275). Here the "wire format" is the marker grammar embedded in
 ``text`` (see sources/synth.py) and decoding is regex extraction.
 
-Two interchangeable implementations produce byte-identical output (asserted
-in tests):
+One production parse, ``parse_turns``: pure ``pyspark.sql.functions``
+regexp expressions inside whole-stage codegen, zero Python. Batch and
+streaming entry points both run it. Round-1 evidence chose it: on an idle
+host a pandas UDF measured 2-4× faster (pandas' C string loops beat
+java.util.regex), but under host CPU contention the run of record
+(BENCH_r01.json) had the pandas path at 21.1s vs native 5.18s — the Python
+worker pool degrades unboundedly under steal while codegen's worst case
+stays bounded. On an idle 4-core host native now wins too: 2.06 s against
+2.19 s median per 60k-turn pipeline run.
 
-- ``parse_turns_native`` — pure ``pyspark.sql.functions`` regexp expressions
-  inside whole-stage codegen; zero Python. THE DEFAULT. Round-1 evidence
-  flipped this choice: on an idle host the pandas UDF measured 2-4× faster
-  (pandas' C string loops beat java.util.regex), but under host CPU
-  contention the driver's run of record (BENCH_r01.json) had the pandas
-  path at 21.1s vs native 5.18s — the Python worker pool degrades
-  unboundedly under steal while codegen's worst case stays bounded. The
-  default must be robust, not best-case-fastest.
-- ``parse_turns_pandas`` — one Arrow-batched ``pandas_udf`` using vectorized
-  ``Series.str.extract`` (no per-row Python) — the grok-UDF surface the
-  design calls for, byte-identical (asserted), still the right choice on
-  clusters with reserved cores; the streaming pipeline runs it by default
-  so both impls stay driver-exercised.
+``parse_turns_pandas`` — one Arrow-batched ``pandas_udf`` using vectorized
+``Series.str.extract`` (no per-row Python) — is its differential twin: an
+independent implementation in another regex engine that tests assert
+byte-identical to ``parse_turns``. No pipeline entry point runs it.
 
 Field semantics mirrored from the reference:
 
@@ -113,7 +111,7 @@ def _severity_from(tok: Column, num: Column) -> Column:
     )
 
 
-def parse_turns_native(df: DataFrame, text_col: str = "text") -> DataFrame:
+def parse_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Parse via JVM-side regexp expressions (whole-stage codegen path)."""
     return df.withColumns(dict(_parsed_columns(text_col)))
 
@@ -194,10 +192,3 @@ def parse_turns_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
     parsed = df.withColumn("_parsed", _parse_udf(F.col(text_col)))
     return parsed.select("*", "_parsed.*").drop("_parsed")
 
-
-def parse_turns(df: DataFrame, text_col: str = "text", impl: str = "native") -> DataFrame:
-    """Dispatch: 'native' (default, codegen — robust under host contention)
-    or 'pandas' (Arrow grok UDF — fastest on idle reserved cores)."""
-    if impl == "pandas":
-        return parse_turns_pandas(df, text_col)
-    return parse_turns_native(df, text_col)

@@ -143,7 +143,7 @@ def to_metrics(df: DataFrame) -> DataFrame:
 SINK_BUILDERS = {"traces": to_traces, "logs": to_logs, "metrics": to_metrics}
 
 # every column of the routed frame that a sink builder or sink_counts reads
-# (pinned by tests/test_plan_guards.py) — what run_pipeline caches
+# (pinned by tests/test_plan_guards.py) — what the sink fan-out caches
 SINK_COLUMNS = (
     "signal_type", "conv_id", "turn_idx", "ts", "role", "tool", "service_name",
     "trace_id", "span_id", "parent_span_id", "call_tool", "dur_ms", "status",
@@ -166,3 +166,7 @@ def sink_counts(routed: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+# every sink the batch and streaming pipelines write, in write order
+SINKS = {**SINK_BUILDERS, "sink_counts": sink_counts}

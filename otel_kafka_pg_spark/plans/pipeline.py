@@ -15,20 +15,20 @@ consumer.go:162-329). One lazily-built DAG:
 
 Scale notes (the plan that must survive 1000 executors / 100 TB):
 - everything before the sinks is one narrow pipelined stage per scan
-  split: no exchange, under whole-stage codegen (native parse) or Arrow
-  batches (pandas parse). The only wide operation is the counts
-  aggregation (map-side partial). Sink rows carry content-derived IDs, so
-  no ordering is needed; the ordering window (operators/order.py) is not
-  in the DAG. Sources with fewer scan splits than cores (one big file,
+  split: no exchange, under whole-stage codegen. The only wide operation
+  is the counts aggregation (map-side partial). Sink rows carry
+  content-derived IDs, so no ordering is needed; the ordering window
+  (operators/order.py) is not in the DAG. Sources with fewer scan splits than cores (one big file,
   skew-laid-out inputs) opt into the pre-parse salted repartition with
   ``salt_buckets>0`` — see build_routed.
 - the enrich join is a broadcast hash join by construction — no shuffle of
   the fact side, no skew exposure.
-- fan-out materializes the routed frame's SINK_COLUMNS once (persist,
-  MEMORY_AND_DISK_DESER: blocks that do not fit in executor memory spill to
-  local disk). The first pending sink fills the cache; the others then scan
-  it concurrently from driver threads, each its own Spark job, the way the
-  reference flushes each signal type's batch on its own
+- fan-out (``write_sinks``, shared with the streaming pipeline's
+  micro-batches) materializes the routed frame's SINK_COLUMNS once
+  (persist, MEMORY_AND_DISK_DESER: blocks that do not fit in executor
+  memory spill to local disk). The first pending sink fills the cache; the
+  others then scan it concurrently from driver threads, each its own Spark
+  job, the way the reference flushes each signal type's batch on its own
   (consumer.go:302,316). A single-sink resume skips the cache.
 - writes are per-sink parquet (Iceberg-ready: swap the writer for
   ``writeTo(...).append()`` — the manifest/resume logic is sink-agnostic).
@@ -39,6 +39,7 @@ from __future__ import annotations
 import os
 import threading
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,7 +47,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..operators.enrich import enrich_with_lookup
 from ..operators.order import salted_repartition
-from ..operators.route import SINK_BUILDERS, SINK_COLUMNS, classify_signal, sink_counts, with_attributes
+from ..operators.route import SINK_BUILDERS, SINK_COLUMNS, SINKS, classify_signal, with_attributes
 from ..sources.synth import service_lookup_pandas
 from .manifest import (
     input_fingerprint,
@@ -54,10 +55,6 @@ from .manifest import (
     save_manifest,
     write_with_summary,
 )
-
-
-class SinkFailure(RuntimeError):
-    """Test hook: injected failure between sink writes (resume testing)."""
 
 
 def _lookup_fingerprint(lookup) -> str:
@@ -86,7 +83,6 @@ def build_routed(
     spark: SparkSession,
     transcripts: DataFrame,
     lookup: DataFrame | None = None,
-    parse_impl: str = "native",
     salt_buckets: int = 0,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -109,7 +105,7 @@ def build_routed(
     if salt_buckets:
         n = num_partitions or spark.sparkContext.defaultParallelism
         df = salted_repartition(df, n, salt_buckets)
-    df = parse_turns(df, impl=parse_impl)
+    df = parse_turns(df)
     df = enrich_with_lookup(df, lookup)
     return with_attributes(classify_signal(df))
 
@@ -119,10 +115,8 @@ def run_pipeline(
     input_path: str,
     out_dir: str,
     lookup: DataFrame | None = None,
-    parse_impl: str = "native",
     salt_buckets: int = 0,
     resume: bool = True,
-    fail_after_sink: str | None = None,
 ) -> dict:
     """Run the pipeline end-to-end with manifest checkpointing.
 
@@ -143,28 +137,17 @@ def run_pipeline(
     if manifest.get("input_fingerprint") != fp or manifest.get("layout") == "onepass":
         manifest = {"input_fingerprint": fp, "sinks": {}}
 
-    pending = [
-        s
-        for s in (*SINK_BUILDERS, "sink_counts")
-        if manifest["sinks"].get(s, {}).get("status") != "complete"
-    ]
+    pending = [s for s in SINKS if manifest["sinks"].get(s, {}).get("status") != "complete"]
     if not pending:
         return manifest
 
-    transcripts = spark.read.parquet(input_path)
-    routed = build_routed(spark, transcripts, lookup, parse_impl, salt_buckets)
-    # a cache only pays for itself when more than one sink will scan it —
-    # a single-sink resume scans the frame exactly once
-    cached = len(pending) > 1
-    if cached:
-        routed = routed.select(*SINK_COLUMNS).persist()
-    builders = {**SINK_BUILDERS, "sink_counts": sink_counts}
+    routed = build_routed(spark, spark.read.parquet(input_path), lookup, salt_buckets)
     lock = threading.Lock()
 
-    def write_sink(sink_name: str) -> None:
+    def save_sink(sink_name: str, frame: DataFrame) -> None:
         dest = os.path.join(out_dir, sink_name)
         w0 = time.monotonic()
-        rows, chash, lineage = write_with_summary(builders[sink_name](routed), dest)
+        rows, chash, lineage = write_with_summary(frame, dest)
         entry = {
             "status": "complete",
             "rows": rows,
@@ -176,51 +159,63 @@ def run_pipeline(
         with lock:
             manifest["sinks"][sink_name] = entry
             save_manifest(out_dir, manifest)
-        if fail_after_sink == sink_name:
-            raise SinkFailure(f"injected failure after sink {sink_name}")
+
+    t0 = time.monotonic()
+    write_sinks(spark, routed, pending, save_sink)
+    # routing is exclusive and exhaustive (trace|metric|log), so the input
+    # row count is exactly the sum of the three sink row counts — no
+    # separate count job over the routed frame
+    input_rows = sum(manifest["sinks"][s]["rows"] for s in SINK_BUILDERS if s in manifest["sinks"])
+    for s in manifest["sinks"].values():
+        s["input_rows"] = input_rows
+    manifest["elapsed_sec"] = time.monotonic() - t0
+    # turns_per_sec is only meaningful when THIS invocation wrote every
+    # sink: on a partial resume, input_rows counts rows written by
+    # previous runs while elapsed_sec covers only the resumed tail, so
+    # the ratio would be inflated — record the resumed state instead
+    if set(pending) >= set(SINK_BUILDERS):
+        manifest["turns_per_sec"] = (
+            input_rows / manifest["elapsed_sec"] if manifest["elapsed_sec"] else None
+        )
+        manifest.pop("resumed_partial", None)
+    else:
+        manifest["resumed_partial"] = {
+            "sinks_this_run": sorted(pending),
+            "elapsed_sec_this_run": manifest["elapsed_sec"],
+        }
+        manifest.pop("turns_per_sec", None)
+    save_manifest(out_dir, manifest)
+    return manifest
+
+
+def write_sinks(
+    spark: SparkSession, routed: DataFrame, pending: list[str], write: Callable[[str, DataFrame], None]
+) -> None:
+    """Fan the routed frame out to the ``pending`` sinks (SINKS names, at
+    least one): ``write(name, frame)`` stores one sink's frame. With more
+    than one pending, SINK_COLUMNS are persisted, the first sink is written
+    alone to fill the cache and the rest scan it concurrently; a single
+    sink scans the frame once, uncached. Leaving the pool's block waits for
+    every write, failed or not, so the cache outlives all of them; the
+    first failure is then raised."""
+    cached = len(pending) > 1
+    if cached:
+        routed = routed.select(*SINK_COLUMNS).persist()
+
+    def write_one(name: str) -> None:
+        write(name, SINKS[name](routed))
 
     try:
-        t0 = time.monotonic()
-        # the first write fills the cache; the rest scan it concurrently.
-        # Leaving the pool's block waits for every write, failed or not, so
-        # the cache outlives all of them.
         first, *rest = pending
-        write_sink(first)
+        write_one(first)
         if rest:
             with ThreadPoolExecutor(max_workers=len(rest)) as pool:
                 # wrapped here, in the caller's thread, so each write runs
                 # under the caller's Spark local properties (job group, pool) and tags
                 inherit = inheritable_thread_target(spark)
-                futures = [pool.submit(inherit(write_sink), s) for s in rest]
+                futures = [pool.submit(inherit(write_one), s) for s in rest]
             for f in futures:
                 f.result()
-        # routing is exclusive and exhaustive (trace|metric|log), so the input
-        # row count is exactly the sum of the three sink row counts — no
-        # separate count job over the routed frame
-        input_rows = sum(
-            manifest["sinks"][s]["rows"] for s in SINK_BUILDERS if s in manifest["sinks"]
-        )
-        for s in manifest["sinks"].values():
-            s["input_rows"] = input_rows
-        manifest["elapsed_sec"] = time.monotonic() - t0
-        # turns_per_sec is only meaningful when THIS invocation wrote every
-        # sink: on a partial resume, input_rows counts rows written by
-        # previous runs while elapsed_sec covers only the resumed tail, so
-        # the ratio would be inflated — record the resumed state instead
-        if set(pending) >= set(SINK_BUILDERS):
-            manifest["turns_per_sec"] = (
-                input_rows / manifest["elapsed_sec"] if manifest["elapsed_sec"] else None
-            )
-            manifest.pop("resumed_partial", None)
-        else:
-            manifest["resumed_partial"] = {
-                "sinks_this_run": sorted(pending),
-                "elapsed_sec_this_run": manifest["elapsed_sec"],
-            }
-            manifest.pop("turns_per_sec", None)
-        save_manifest(out_dir, manifest)
     finally:
         if cached:
             routed.unpersist()
-    return manifest
-

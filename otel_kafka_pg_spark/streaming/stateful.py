@@ -77,9 +77,7 @@ def _track(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Itera
     )
 
 
-def conversation_state_stream(
-    spark, input_dir: str, parse_impl: str = "native", max_files_per_trigger: int = 2
-) -> DataFrame:
+def conversation_state_stream(spark, input_dir: str, max_files_per_trigger: int = 2) -> DataFrame:
     """Streaming per-conversation running totals: readStream → parse →
     signal classification → applyInPandasWithState keyed by conv_id.
     Returns the streaming DataFrame (update output mode; caller starts it).
@@ -95,7 +93,7 @@ def conversation_state_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    classified = classify_signal(parse_turns(stream, impl=parse_impl)).select(
+    classified = classify_signal(parse_turns(stream)).select(
         "conv_id", "ts", "signal_type"
     )
     return classified.groupBy("conv_id").applyInPandasWithState(
@@ -171,7 +169,6 @@ def run_conversation_state_stream(
     spark,
     input_dir: str,
     out_dir: str,
-    parse_impl: str = "native",
     max_files_per_trigger: int = 2,
 ) -> str:
     """Durable form of ``conversation_state_stream``: the update stream
@@ -196,7 +193,7 @@ def run_conversation_state_stream(
         import shutil
 
         shutil.rmtree(dest, ignore_errors=True)
-    updates = conversation_state_stream(spark, input_dir, parse_impl, max_files_per_trigger)
+    updates = conversation_state_stream(spark, input_dir, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()  # two actions: signature aggregate + append

@@ -11,7 +11,9 @@ of capability:
     Kafka poll loop          → ``readStream`` file/kafka source
     BatchSize/FlushInterval  → ``maxFilesPerTrigger`` / processing trigger
     buffer flush → save      → ``foreachBatch``: the SAME transform DAG
-                               (build_routed) + per-sink append
+                               (build_routed) and sink fan-out
+                               (write_sinks) as the batch pipeline,
+                               appending per sink
     at-least-once + upsert   → checkpoint replays a failed micro-batch;
                                per-(sink, batch_id) commit markers make the
                                replayed appends idempotent — a sink that
@@ -45,7 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.route import SINK_BUILDERS, sink_counts
+from ..operators.route import SINKS
 from ..schemas import TRANSCRIPTS
 from .markers import marker_committed, write_marker
 
@@ -84,7 +86,6 @@ def run_stream(
     out_dir: str,
     lookup: DataFrame | None = None,
     max_files_per_trigger: int = 4,
-    parse_impl: str = "pandas",
     source_format: str = "files",
     kafka_options: dict | None = None,
 ) -> None:
@@ -100,7 +101,7 @@ def run_stream(
     ``kafka.bootstrap.servers``. A production deployment drops
     ``availableNow`` for a continuous processing-time trigger.
     """
-    from ..plans.pipeline import build_routed
+    from ..plans.pipeline import build_routed, write_sinks
     from ..sources.synth import service_lookup_pandas
 
     # build the (static) enrich lookup ONCE for the stream's lifetime —
@@ -121,7 +122,7 @@ def run_stream(
     if not os.path.isdir(checkpoint):
         import shutil
 
-        for name in (*SINK_BUILDERS, "sink_counts"):
+        for name in SINKS:
             shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
     if source_format == "kafka":
         stream = _kafka_turn_stream(spark, kafka_options or {})
@@ -134,8 +135,8 @@ def run_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # identical semantics to the batch pipeline: the micro-batch frame
-        # is a plain DataFrame, so the whole DAG (parse, ordering window,
-        # broadcast enrich, route) applies unchanged
+        # is a plain DataFrame, so the whole DAG (parse, broadcast enrich,
+        # route, attributes) and the sink fan-out apply unchanged
         import hashlib
 
         # content signature of the micro-batch's source: for the file
@@ -178,26 +179,23 @@ def run_stream(
             ).collect()[0]
             sig_src = f"batch:{batch_id}:{m['n']}:{m['h']}"
         input_sig = hashlib.sha256(sig_src.encode()).hexdigest()
-        routed = build_routed(spark, batch_df, lookup, parse_impl).persist()
-        try:
-            builders = {**SINK_BUILDERS, "sink_counts": sink_counts}
-            for name, builder in builders.items():
-                # idempotent replay: if this (sink, batch) already committed
-                # (marker present with the same input signature), a
-                # checkpoint-replayed batch skips it — without this, a
-                # failure after writing some sinks would re-append to them
-                # on restart, duplicating rows. A crash between append-commit
-                # and marker-write re-appends that one sink; the marker is
-                # written immediately after the commit so the window is one
-                # filesystem call wide, and the deterministic row IDs let
-                # any downstream dedup close it.
-                sink_dir = os.path.join(out_dir, name)
-                if marker_committed(sink_dir, batch_id, input_sig):
-                    continue
-                builder(routed).write.mode("append").parquet(sink_dir)
-                write_marker(sink_dir, batch_id, input_sig)
-        finally:
-            routed.unpersist()
+        # idempotent replay: a sink that already committed this batch
+        # (marker present with the same input signature) is skipped, so a
+        # checkpoint-replayed batch after a failure between sink writes
+        # re-appends only to the sinks that had not committed. A crash
+        # between append-commit and marker-write re-appends that one sink;
+        # the marker is written immediately after the commit so the window
+        # is one filesystem call wide, and the deterministic row IDs let
+        # any downstream dedup close it.
+        pending = [s for s in SINKS if not marker_committed(os.path.join(out_dir, s), batch_id, input_sig)]
+
+        def append(name: str, frame: DataFrame) -> None:
+            sink_dir = os.path.join(out_dir, name)
+            frame.write.mode("append").parquet(sink_dir)
+            write_marker(sink_dir, batch_id, input_sig)
+
+        if pending:
+            write_sinks(spark, build_routed(spark, batch_df, lookup), pending, append)
 
     q = (
         stream.writeStream.foreachBatch(process_batch)
@@ -224,7 +222,6 @@ def streaming_severity_counts(
     input_dir: str,
     watermark: str = "2 hours",
     window: str = "1 hour",
-    parse_impl: str = "pandas",
 ) -> DataFrame:
     """Watermarked event-time windowed severity counts over the turn stream.
 
@@ -236,7 +233,7 @@ def streaming_severity_counts(
     from ..functions.parse import parse_turns
 
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_dir)
-    parsed = parse_turns(stream, impl=parse_impl)
+    parsed = parse_turns(stream)
     return (
         parsed.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("bucket"), "severity")
@@ -292,7 +289,6 @@ def stream_trace_log_join(
     input_dir: str,
     watermark: str = "2 hours",
     max_lag_seconds: int = 10,
-    parse_impl: str = "native",
 ) -> DataFrame:
     """Stream-STREAM event-time interval join: correlate every trace turn
     with the log turns of the same conversation that arrive within
@@ -317,7 +313,7 @@ def stream_trace_log_join(
     from ..operators.route import classify_signal
 
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_dir)
-    routed = classify_signal(parse_turns(stream, impl=parse_impl))
+    routed = classify_signal(parse_turns(stream))
     traces = (
         routed.filter(F.col("signal_type") == "trace")
         .select(

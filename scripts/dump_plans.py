@@ -9,6 +9,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -31,11 +32,21 @@ SHOWCASE = [
 ]
 
 
+# ids from session-wide counters: expression ids, plan ids, lambda variables
+_SESSION_IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(lambda [A-Za-z]+_)(\d+)")
+
+
 def formatted(df) -> str:
+    """The formatted plan with its session-wide ids renumbered in order of
+    first appearance: a section changes only when its plan does."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    plan = buf.getvalue()
+    for pattern in _SESSION_IDS:
+        ids: dict[str, int] = {}
+        plan = re.sub(pattern, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))), plan)
+    return plan
 
 
 def main() -> int:

@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from otel_kafka_pg_spark.functions.parse import parse_turns_native
+from otel_kafka_pg_spark.functions.parse import parse_turns
 from otel_kafka_pg_spark.operators.enrich import enrich_with_lookup
 from otel_kafka_pg_spark.operators.route import classify_signal, to_logs, to_traces, with_attributes
 from otel_kafka_pg_spark.schemas import SERVICE_LOOKUP, TRANSCRIPTS
@@ -23,7 +23,7 @@ def _prep(spark, rows, lookup_rows):
     df = spark.createDataFrame(rows, TRANSCRIPTS)
     lk = spark.createDataFrame(lookup_rows, SERVICE_LOOKUP)
     # as in build_routed, with_attributes adds the column the sink builders read
-    return with_attributes(classify_signal(enrich_with_lookup(parse_turns_native(df), lk)))
+    return with_attributes(classify_signal(enrich_with_lookup(parse_turns(df), lk)))
 
 
 def _conflicting_lookup():

@@ -7,7 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from otel_kafka_pg_spark.functions.parse import parse_turns_native, parse_turns_pandas
+from otel_kafka_pg_spark.functions.parse import parse_turns, parse_turns_pandas
 from otel_kafka_pg_spark.schemas import TRANSCRIPTS
 
 TS = dt.datetime(2025, 1, 1)
@@ -32,7 +32,7 @@ PARSE_COLS = [
 ]
 
 
-def _parse_one(spark, text, impl=parse_turns_native):
+def _parse_one(spark, text, impl=parse_turns):
     return impl(_df(spark, [text])).select(*PARSE_COLS).collect()[0].asDict()
 
 
@@ -93,7 +93,7 @@ def test_message_strips_all_markers(spark):
 def test_native_and_pandas_impls_identical(spark, transcripts_path):
     """Differential: both parse paths must agree byte-for-byte on real data."""
     df = spark.read.parquet(transcripts_path)
-    a = parse_turns_native(df).select("conv_id", "turn_idx", *PARSE_COLS)
+    a = parse_turns(df).select("conv_id", "turn_idx", *PARSE_COLS)
     b = parse_turns_pandas(df).select("conv_id", "turn_idx", *PARSE_COLS)
     assert a.schema == b.schema
     assert a.exceptAll(b).count() == 0
@@ -103,7 +103,7 @@ def test_native_and_pandas_impls_identical(spark, transcripts_path):
 def test_native_parse_stays_in_codegen(spark, transcripts_path):
     """The native parse must not break whole-stage codegen (no Python in the
     hot path) — scale guard, not just correctness."""
-    df = parse_turns_native(spark.read.parquet(transcripts_path))
+    df = parse_turns(spark.read.parquet(transcripts_path))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "*(" in plan  # whole-stage-codegen stage marker
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -135,7 +135,7 @@ def test_fuzz_differential_adversarial_texts(spark):
         k = rng.randint(0, 5)
         texts.append(" ".join(rng.choice(frags) for _ in range(k)) or "x")
     df = _df(spark, texts)
-    a = parse_turns_native(df).select("turn_idx", *PARSE_COLS)
+    a = parse_turns(df).select("turn_idx", *PARSE_COLS)
     b = parse_turns_pandas(df).select("turn_idx", *PARSE_COLS)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
@@ -165,7 +165,7 @@ def test_native_pandas_agree_on_nonascii_word_boundaries(spark):
         "Ⅻ" + "ERROR",  # Nl numeral abutting a token
     ]
     df = _df(spark, texts)
-    a = parse_turns_native(df).select("turn_idx", *PARSE_COLS)
+    a = parse_turns(df).select("turn_idx", *PARSE_COLS)
     b = parse_turns_pandas(df).select("turn_idx", *PARSE_COLS)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0

@@ -15,7 +15,8 @@ import shutil
 import pandas as pd
 import pytest
 
-from otel_kafka_pg_spark.plans.pipeline import SinkFailure, run_pipeline
+from otel_kafka_pg_spark.plans import pipeline
+from otel_kafka_pg_spark.plans.pipeline import run_pipeline
 from otel_kafka_pg_spark.schemas import LOGS_SINK, METRICS_SINK, SINK_COUNTS, TRACES_SINK
 from otel_kafka_pg_spark.sources.synth import service_lookup_pandas
 
@@ -67,17 +68,32 @@ def test_lineage_covers_all_rows(pipe_out):
 def test_determinism_rerun_same_hashes(spark, transcripts_path, pipe_out, tmp_path):
     _, manifest1 = pipe_out
     out2 = str(tmp_path / "rerun")
-    manifest2 = run_pipeline(spark, transcripts_path, out2, parse_impl="native")
+    manifest2 = run_pipeline(spark, transcripts_path, out2)
     for sink in ("traces", "logs", "metrics", "sink_counts"):
         assert manifest1["sinks"][sink]["content_hash"] == manifest2["sinks"][sink]["content_hash"], sink
         assert manifest1["sinks"][sink]["rows"] == manifest2["sinks"][sink]["rows"], sink
 
 
-def test_idempotent_resume_after_partial_failure(spark, transcripts_path, pipe_out, tmp_path):
+def _fail_after_sink(monkeypatch, sink):
+    """Crash between sink writes: the first manifest save that records
+    ``sink`` completes, then raises."""
+    real_save, fired = pipeline.save_manifest, []
+
+    def save_then_fail(out_dir, manifest):
+        real_save(out_dir, manifest)
+        if sink in manifest["sinks"] and not fired:
+            fired.append(sink)
+            raise RuntimeError(f"injected failure after sink {sink}")
+
+    monkeypatch.setattr(pipeline, "save_manifest", save_then_fail)
+
+
+def test_idempotent_resume_after_partial_failure(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
     _, manifest_full = pipe_out
     out = str(tmp_path / "resume")
-    with pytest.raises(SinkFailure):
-        run_pipeline(spark, transcripts_path, out, fail_after_sink="traces")
+    _fail_after_sink(monkeypatch, "traces")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, transcripts_path, out)
     # traces completed before the crash; logs/metrics/counts did not
     from otel_kafka_pg_spark.plans.manifest import load_manifest
 
@@ -100,8 +116,8 @@ def _finished_writes_only(spark, manifest):
         assert spark.read.parquet(entry["path"]).count() == entry["rows"], sink
 
 
-def test_resume_after_failure_on_a_pooled_sink(spark, transcripts_path, pipe_out, tmp_path):
-    """fail_after_sink naming a sink written from the pool (not the serial
+def test_resume_after_failure_on_a_pooled_sink(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
+    """A failure after a sink written from the pool (not the serial
     first one): the injected failure surfaces from run_pipeline, the
     manifest holds metrics plus only sinks whose writes finished, and a
     resume reproduces the full run's hashes."""
@@ -109,8 +125,9 @@ def test_resume_after_failure_on_a_pooled_sink(spark, transcripts_path, pipe_out
 
     _, manifest_full = pipe_out
     out = str(tmp_path / "pooled")
-    with pytest.raises(SinkFailure):
-        run_pipeline(spark, transcripts_path, out, fail_after_sink="metrics")
+    _fail_after_sink(monkeypatch, "metrics")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, transcripts_path, out)
     partial = load_manifest(out)
     assert {"traces", "metrics"} <= set(partial["sinks"])
     _finished_writes_only(spark, partial)
@@ -127,8 +144,7 @@ def test_pooled_sink_error_waits_for_running_writes(spark, transcripts_path, pip
     import threading
     import time
 
-    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS
-    from otel_kafka_pg_spark.plans import pipeline
+    from otel_kafka_pg_spark.operators.route import SINKS
     from otel_kafka_pg_spark.plans.manifest import load_manifest
 
     _, manifest_full = pipe_out
@@ -156,7 +172,7 @@ def test_pooled_sink_error_waits_for_running_writes(spark, transcripts_path, pip
         return real_unpersist(self, *a, **kw)
 
     monkeypatch.setattr(pipeline, "write_with_summary", counting_write)
-    monkeypatch.setitem(SINK_BUILDERS, "logs", broken_logs)
+    monkeypatch.setitem(SINKS, "logs", broken_logs)
     monkeypatch.setattr(frame_cls, "unpersist", spy_unpersist)
     out = str(tmp_path / "broken")
     with pytest.raises(RuntimeError, match="logs builder broke"):
@@ -200,13 +216,12 @@ def test_concurrent_manifest_updates_lose_no_sink(spark, transcripts_path, tmp_p
     import threading
     import time
 
-    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS
-    from otel_kafka_pg_spark.plans import pipeline
+    from otel_kafka_pg_spark.operators.route import SINKS
     from otel_kafka_pg_spark.plans.manifest import MANIFEST_NAME, load_manifest
 
     extra = [f"stress{i:02d}" for i in range(24)]
     for name in extra:
-        monkeypatch.setitem(SINK_BUILDERS, name, lambda routed: routed)
+        monkeypatch.setitem(SINKS, name, lambda routed: routed)
     barrier = threading.Barrier(len(extra), timeout=60)
 
     def stand_in_write(df, dest):

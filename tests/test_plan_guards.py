@@ -171,13 +171,30 @@ def test_persisted_frame_is_sink_columns(spark, tmp_path, monkeypatch):
 def test_parse_stays_in_wholestage_codegen(spark):
     """Native parse must be inside a WholeStageCodegen span — no Python, no
     interpreted eval in the hot path."""
-    from otel_kafka_pg_spark.functions.parse import parse_turns_native
+    from otel_kafka_pg_spark.functions.parse import parse_turns
     from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
 
-    df = parse_turns_native(spark.read.parquet(load_or_synth_transcripts(2000, seed=7)))
+    df = parse_turns(spark.read.parquet(load_or_synth_transcripts(2000, seed=7)))
     plan = _plan(df)
     assert "*(" in plan  # codegen'd spans print as "*(<stage id>)"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_streaming_entry_points_parse_in_the_jvm(spark, tmp_path):
+    """The streaming entry points run the same codegen parse as batch: no
+    Python evaluation in the plan of either streaming frame."""
+    from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
+    from otel_kafka_pg_spark.streaming.stream_pipeline import (
+        stream_trace_log_join,
+        streaming_severity_counts,
+    )
+
+    src = str(tmp_path / "src")
+    spark.read.parquet(load_or_synth_transcripts(2000, seed=7)).write.parquet(src)
+    for frame in (streaming_severity_counts(spark, src), stream_trace_log_join(spark, src)):
+        plan = spark._jvm.PythonSQLUtils.explainString(frame._jdf.queryExecution(), "extended")
+        assert "regexp_extract" in plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_salted_repartition_spreads_hot_conversation(spark):

@@ -233,7 +233,7 @@ def test_parse_twins_identical_on_woven_unicode(spark, docs):
     import datetime as dt
 
     from otel_kafka_pg_spark.functions.parse import (
-        parse_turns_native,
+        parse_turns,
         parse_turns_pandas,
     )
     from otel_kafka_pg_spark.schemas import TRANSCRIPTS
@@ -246,6 +246,6 @@ def test_parse_twins_identical_on_woven_unicode(spark, docs):
         "status", "call_tool", "dur_ms", "metric_name", "metric_value",
         "message",
     ]
-    a = parse_turns_native(df).select(*cols)
+    a = parse_turns(df).select(*cols)
     b = parse_turns_pandas(df).select(*cols)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, docs

@@ -102,6 +102,51 @@ def test_stream_partial_failure_skips_committed_sink(spark, stream_input, tmp_pa
         ), sink
 
 
+def test_stream_pooled_sink_failure_resumes_without_duplicates(spark, stream_input, tmp_path_factory, monkeypatch):
+    """Concurrent sink appends under failure: the metrics append (written
+    from the pool, beside logs and sink_counts) raises in micro-batch 0, so
+    run_stream raises. A rerun with the checkpoint kept replays batch 0,
+    skips the sinks whose batch-0 markers were committed, and leaves every
+    sink with exactly a clean run's rows."""
+    from otel_kafka_pg_spark.operators.route import SINKS
+    from otel_kafka_pg_spark.streaming.markers import marker_file
+
+    ref = str(tmp_path_factory.mktemp("stream_pool_ref"))
+    run_stream(spark, stream_input, ref, max_files_per_trigger=2)
+
+    out = str(tmp_path_factory.mktemp("stream_pool_fail"))
+    writer_cls = type(spark.range(1).write)
+    real_parquet, appends, failed = writer_cls.parquet, [], []
+
+    def parquet(self, path, *a, **kw):
+        sink = os.path.relpath(path, out)
+        if sink == "metrics" and not failed:
+            failed.append(sink)
+            raise RuntimeError("injected append failure")
+        appends.append(sink)
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(writer_cls, "parquet", parquet)
+    with pytest.raises(Exception, match="injected append failure"):
+        run_stream(spark, stream_input, out, max_files_per_trigger=2)
+    committed = {s for s in SINKS if os.path.exists(marker_file(os.path.join(out, s), 0))}
+    assert committed == {"traces", "logs", "sink_counts"}
+
+    appends.clear()
+    run_stream(spark, stream_input, out, max_files_per_trigger=2)
+    n_batches = len([f for f in os.listdir(os.path.join(out, "_checkpoint", "commits")) if not f.startswith(".")])
+    assert n_batches >= 2
+    assert appends.count("metrics") == n_batches
+    for sink in committed:  # batch 0 skipped by its marker
+        assert appends.count(sink) == n_batches - 1, sink
+    for sink in SINKS:
+        s = spark.read.parquet(os.path.join(out, sink))
+        r = spark.read.parquet(os.path.join(ref, sink))
+        assert s.count() == r.count(), sink
+        assert s.exceptAll(r).count() == 0, sink
+        assert r.exceptAll(s).count() == 0, sink
+
+
 def test_stream_stale_marker_with_different_inputs_is_reprocessed(spark, stream_input, tmp_path_factory):
     """ADVICE r2: markers are signed with the batch's source-offset
     signature (input-file list). A leftover marker whose batch_id collides
@@ -216,7 +261,7 @@ def test_stateful_conversation_state_matches_batch(spark, stream_input, tmp_path
 
     got = final_conversation_state(updates)
     batch = (
-        classify_signal(parse_turns(spark.read.parquet(stream_input), impl="native"))
+        classify_signal(parse_turns(spark.read.parquet(stream_input)))
         .groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -244,7 +289,7 @@ def _batch_conv_state(spark, stream_input):
     from otel_kafka_pg_spark.operators.route import classify_signal
 
     return (
-        classify_signal(parse_turns(spark.read.parquet(stream_input), impl="native"))
+        classify_signal(parse_turns(spark.read.parquet(stream_input)))
         .groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
