@@ -45,8 +45,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-STAGES = ("gated", "kept", "reps", "sample", "packed")
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -75,23 +73,12 @@ def main() -> int:
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
-    from pyspark import SparkConf
-    from pyspark.sql import SparkSession
+    from otel_kafka_pg_spark.session import get_job_spark
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    elif SparkConf().contains("spark.master"):
-        from otel_kafka_pg_spark.session import get_submit_spark
-
-        spark = get_submit_spark(app_name="corpus_prep")
-    else:
-        from otel_kafka_pg_spark.session import get_spark
-
-        spark = get_spark(app_name="corpus_prep")
+    spark = get_job_spark("corpus_prep")
 
     from otel_kafka_pg_spark.plans import corpus_prep as cp
-    from otel_kafka_pg_spark.plans.manifest import input_fingerprint, write_with_summary
+    from otel_kafka_pg_spark.plans.manifest import atomic_write, input_fingerprint, write_with_summary
 
     # knobs that the chosen method ignores are normalized OUT of the resume
     # fingerprint — changing --quality-min under --quality gopher (which
@@ -151,14 +138,11 @@ def main() -> int:
         rows, chash, lin = write_with_summary(frame, dest)
         counts[name] = rows
         lineage[name] = lin
-        # atomic stamp write (tmp + replace, the save_manifest discipline):
-        # a kill mid-write must leave no stamp rather than a torn one
-        tmp_stamp = stamp_path + ".tmp"
-        with open(tmp_stamp, "w") as fh:
-            json.dump(
-                {"fingerprint": fp, "rows": rows, "content_hash": chash, "lineage": lin}, fh
-            )
-        os.replace(tmp_stamp, stamp_path)
+        # atomic: a kill mid-write must leave no stamp rather than a torn one
+        atomic_write(
+            stamp_path,
+            json.dumps({"fingerprint": fp, "rows": rows, "content_hash": chash, "lineage": lin}),
+        )
         return spark.read.parquet(dest)
 
     gated_ids = load_or_build(
@@ -193,8 +177,7 @@ def main() -> int:
         "total_tokens": total_tokens,
         "lineage": lineage,
     }
-    with open(manifest_path, "w") as fh:
-        json.dump(manifest, fh, default=str)
+    atomic_write(manifest_path, json.dumps(manifest, default=str))
     print(json.dumps(manifest, default=str))
     return 0
 

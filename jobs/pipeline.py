@@ -40,22 +40,9 @@ def main() -> int:
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
-    from pyspark import SparkConf
-    from pyspark.sql import SparkSession
+    from otel_kafka_pg_spark.session import get_job_spark
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-    elif SparkConf().contains("spark.master"):
-        # launched via spark-submit: the submitted master/executor conf wins;
-        # only engine tuning is layered on
-        from otel_kafka_pg_spark.session import get_submit_spark
-
-        spark = get_submit_spark(app_name="transcript_pipeline")
-    else:
-        from otel_kafka_pg_spark.session import get_spark
-
-        spark = get_spark(app_name="transcript_pipeline")
+    spark = get_job_spark("transcript_pipeline")
 
     input_path = args.input
     if input_path is None:

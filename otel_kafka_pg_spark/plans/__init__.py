@@ -1,2 +1,2 @@
-from .manifest import content_hash, load_manifest, save_manifest  # noqa: F401
+from .manifest import load_manifest, save_manifest  # noqa: F401
 from .pipeline import build_routed, run_pipeline  # noqa: F401

@@ -9,7 +9,7 @@ hash, and per-Spark-partition lineage. A resumed run skips sinks already
 marked complete for the same input fingerprint — idempotent resume of
 partially completed routes.
 
-The content hash is ``bit_xor(xxhash64(row))`` — commutative, so it is
+The content hash is ``bit_xor(row_hash(row))`` — commutative, so it is
 independent of partitioning and task scheduling; two datasets hash equal iff
 they contain the same multiset of rows (xor cancels duplicates pairwise;
 combined with the row count this is collision-safe for our purposes).
@@ -21,7 +21,7 @@ import functools
 import json
 import logging
 import os
-import tempfile
+import uuid
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,12 +32,21 @@ log = logging.getLogger(__name__)
 
 
 @functools.cache
+def row_hash(columns: tuple[str, ...]) -> Column:
+    """Per-row xxhash64 over ``columns``, NULL-position safe: Spark's
+    ``xxhash64`` skips NULL inputs, so ``("x", NULL)`` and ``(NULL, "x")``
+    would hash alike — each NULL is coalesced to its own token after the
+    cast. Built once per column tuple: the per-column expressions cost
+    ~350 py4j round trips for a 12-column frame, paid on every sink write
+    otherwise."""
+    null = F.lit("\x00null")
+    return F.xxhash64(*[F.coalesce(F.col(c).cast("string"), null) for c in columns])
+
+
+@functools.cache
 def _summary_exprs(columns: tuple[str, ...]) -> tuple[Column, Column]:
-    """(row count, xor of per-row xxhash64) over ``columns``. Built once per
-    column tuple: the per-column casts cost ~350 py4j round trips for a
-    12-column frame, paid on every sink write otherwise."""
-    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in columns])
-    return F.count(F.lit(1)).alias("rows"), F.coalesce(F.bit_xor(row_hash), F.lit(0)).alias("h")
+    """(row count, xor of per-row ``row_hash``) over ``columns``."""
+    return F.count(F.lit(1)).alias("rows"), F.coalesce(F.bit_xor(row_hash(columns)), F.lit(0)).alias("h")
 
 
 def content_hash(df: DataFrame) -> tuple[int, int]:
@@ -126,13 +135,21 @@ def load_manifest(out_dir: str) -> dict:
     return {"input_fingerprint": None, "sinks": {}}
 
 
+def atomic_write(path: str, text: str) -> None:
+    """Write a small file atomically (unique tmp beside it + ``os.replace``):
+    a kill mid-write leaves the old file or none, never a torn one. The tmp
+    name is hidden (leading dot), so neither Spark's parquet listing nor
+    ``input_fingerprint`` ever reads a leftover."""
+    d, name = os.path.split(path)
+    os.makedirs(d or ".", exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "x") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 def save_manifest(out_dir: str, manifest: dict) -> None:
-    """Atomic write (tmp + rename) so a crash never leaves a torn manifest."""
-    os.makedirs(out_dir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, manifest_path(out_dir))
+    atomic_write(manifest_path(out_dir), json.dumps(manifest, indent=1, sort_keys=True))
 
 
 def input_fingerprint(path: str) -> str:

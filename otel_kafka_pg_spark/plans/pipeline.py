@@ -84,7 +84,6 @@ def build_routed(
     transcripts: DataFrame,
     lookup: DataFrame | None = None,
     salt_buckets: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Compose the full transform DAG up to (but excluding) the sinks.
 
@@ -103,8 +102,7 @@ def build_routed(
         lookup = spark.createDataFrame(service_lookup_pandas())
     df = transcripts
     if salt_buckets:
-        n = num_partitions or spark.sparkContext.defaultParallelism
-        df = salted_repartition(df, n, salt_buckets)
+        df = salted_repartition(df, spark.sparkContext.defaultParallelism, salt_buckets)
     df = parse_turns(df)
     df = enrich_with_lookup(df, lookup)
     return with_attributes(classify_signal(df))

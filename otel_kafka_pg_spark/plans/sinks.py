@@ -29,7 +29,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .manifest import write_with_summary
@@ -76,28 +76,32 @@ def merge_upsert(
     from pyspark.sql import Window
 
     cnt = F.count(F.lit(1)).over(Window.partitionBy(key))
-    upd = (
-        updates.select(key, *[F.col(c).alias(f"_u_{c}") for c in value_cols])
-        .withColumn("_cnt", cnt)
-        .filter(
-            F.assert_true(
-                F.col("_cnt") == 1,
-                F.concat(F.lit("MERGE INTO: duplicate update rows for key "), F.col(key).cast("string")),
-            ).isNull()
-        )
-        .drop("_cnt")
+    upd = updates.withColumn("_cnt", cnt).filter(
+        F.assert_true(
+            F.col("_cnt") == 1,
+            F.concat(F.lit("MERGE INTO: duplicate update rows for key "), F.col(key).cast("string")),
+        ).isNull()
     )
-    # presence flag, NOT coalesce per column: a matched update must win
-    # WHOLESALE — including NULL values — exactly like UPDATE SET / ON
-    # CONFLICT DO UPDATE (coalesce would silently keep the base value
-    # wherever an update column is NULL, diverging from the Iceberg MERGE
-    # path; parity incl. the NULL case is pinned in tests/test_sinks.py)
-    upd = upd.withColumn("_u_present", F.lit(True))
-    joined = base.join(upd, key, "full_outer")
-    matched = F.col("_u_present").isNotNull()
-    return joined.select(
-        key,
-        *[F.when(matched, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c) for c in value_cols],
+    return _presence_merge(base, upd, key, value_cols, F.col("u._present").isNotNull())
+
+
+def _presence_merge(
+    base: DataFrame, updates: DataFrame, key: str, cols: list[str], update_wins: Column
+) -> DataFrame:
+    """Full-outer merge of ``updates`` into ``base`` on ``key``: each row
+    takes ALL of ``cols`` from the update side where the Column
+    ``update_wins`` holds, else from the base side. ``update_wins`` sees the
+    base row as ``b.<col>`` and the update row as ``u.<col>``, plus the
+    presence flags ``b._present`` / ``u._present`` (NULL on the side with no
+    row for the key). Presence flags, NOT coalesce per column: a winning
+    update lands wholesale — NULL values included — exactly like UPDATE SET
+    / ON CONFLICT DO UPDATE (coalesce would keep the base value wherever an
+    update column is NULL, diverging from the Iceberg MERGE path; parity
+    incl. the NULL case is pinned in tests/test_sinks.py)."""
+    b = base.select(key, *cols, F.lit(True).alias("_present")).alias("b")
+    u = updates.select(key, *cols, F.lit(True).alias("_present")).alias("u")
+    return b.join(u, key, "full_outer").select(
+        key, *[F.when(update_wins, F.col(f"u.{c}")).otherwise(F.col(f"b.{c}")).alias(c) for c in cols]
     )
 
 

@@ -137,10 +137,7 @@ SINK_COUNTS = T.StructType(
     ]
 )
 
-SINK_NAMES = ("traces", "logs", "metrics")
-
 # Severity: OTLP number → text map, default INFO
 # (reference: modules/log/domain/log.go:32-46).
 SEVERITY_NUM_TO_TEXT = {1: "TRACE", 5: "DEBUG", 9: "INFO", 13: "WARN", 17: "ERROR", 21: "FATAL"}
 SEVERITY_RANK = {"FATAL": 1, "ERROR": 2, "WARN": 3, "INFO": 4, "DEBUG": 5, "TRACE": 6}
-SEVERITIES = tuple(SEVERITY_RANK)

@@ -39,10 +39,19 @@ def _tuned(builder, shuffle_partitions: int):
     )
 
 
-def get_submit_spark(app_name: str = "otel_kafka_pg_spark", shuffle_partitions: int = 200) -> SparkSession:
-    """Session for spark-submit deployments: master/executors come from the
-    submit conf — never overridden here; only engine tuning is applied."""
-    spark = _tuned(SparkSession.builder.appName(app_name), shuffle_partitions).getOrCreate()
+def get_job_spark(app_name: str) -> SparkSession:
+    """Session for a job entry point (``jobs/``): the active session if
+    there is one; else, under spark-submit, the submitted master/executor
+    conf with only engine tuning (200 shuffle partitions, AQE coalesces)
+    layered on; else a local ``get_spark`` session."""
+    from pyspark import SparkConf
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    if not SparkConf().contains("spark.master"):
+        return get_spark(app_name=app_name)
+    spark = _tuned(SparkSession.builder.appName(app_name), 200).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

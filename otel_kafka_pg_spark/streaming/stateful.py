@@ -107,44 +107,29 @@ def conversation_state_stream(spark, input_dir: str, max_files_per_trigger: int 
 
 def _append_once(batch_df: DataFrame, batch_id: int, dest: str) -> bool:
     """Write a micro-batch under ``dest`` exactly once per (batch_id,
-    content signature) — st1's commit-marker discipline
-    (stream_pipeline.run_stream) carried to the stateful path, with one
-    strengthening: each batch lands in its OWN ``batch=<id>`` partition
-    directory via mode("overwrite"), so a crash between the data commit
-    and the marker write replays into an overwrite of the same directory
-    — idempotent by construction, closing the one-filesystem-call window
-    the flat-append form (and st1's sink path) honestly documents.
+    content signature), following the commit protocol of ``markers.py``.
+    Each batch lands in its OWN ``batch=<id>`` directory via
+    mode("overwrite"), so a crash between the data commit and the marker
+    write replays into an overwrite of the same directory — idempotent by
+    construction. The stateful output has no usable ``inputFiles()``
+    lineage (the scan is buried under applyInPandasWithState), so the
+    marker signs the batch's content over all of its columns; replays are
+    deterministic (a replayed batch re-reads the pre-batch state snapshot),
+    so a committed batch re-signs identically and is skipped.
 
-    The stateful output frame has no usable ``inputFiles()`` lineage (the
-    source scan is buried under applyInPandasWithState), so the marker is
-    signed with the batch's CONTENT instead: (row count, order-insensitive
-    xor of xxhash64 rows) — one cheap aggregate over the persisted batch.
-    Replays are deterministic (a replayed batch re-reads the pre-batch
-    state snapshot), so a committed batch re-signs identically and is
-    skipped without touching the data; a stale marker from a wiped/
-    relocated checkpoint whose batch id collides but whose content differs
-    is reprocessed — the overwrite then REPLACES the stale directory
-    rather than appending beside it, and a signature-mismatched batch 0
-    is recognized as a NEW STREAM GENERATION (batch ids only restart at 0
-    when the checkpoint was wiped/relocated): every surviving ``batch=*``
-    directory and marker from the previous generation is cleared first,
-    so stale higher-numbered batches can't linger beside the new run's
-    output and double-count in ``read_state_updates``. (Caveat unchanged
-    from the flat form: a wiped checkpoint replayed under a different
-    batching config re-slices rows across batch ids; replay idempotence
-    assumes the same trigger/source config, which availableNow + a
-    deterministic file source gives.) Marker write is atomic (tmp +
-    replace, via the shared ``markers`` protocol). Returns True iff data
+    A signature-mismatched batch 0 is a NEW STREAM GENERATION (batch ids
+    restart at 0 only when the checkpoint was wiped or relocated): every
+    surviving ``batch=*`` directory and marker is cleared first, so stale
+    higher-numbered batches can't double-count in ``read_state_updates``.
+    Replay idempotence assumes the same trigger/source config, which
+    availableNow + a deterministic file source gives. Returns True iff data
     was (re)written."""
-    import hashlib
     import os
     import shutil
 
-    from ..plans.manifest import content_hash
-    from .markers import MARKER_DIR, marker_committed, marker_file, write_marker
+    from .markers import MARKER_DIR, content_signature, marker_committed, marker_file, write_marker
 
-    rows, h = content_hash(batch_df)
-    sig = hashlib.sha256(f"{rows}:{h}".encode()).hexdigest()
+    sig = content_signature(batch_df, batch_df.columns)
     if marker_committed(dest, batch_id, sig):
         return False
     if batch_id == 0 and os.path.exists(marker_file(dest, 0)):
@@ -172,27 +157,20 @@ def run_conversation_state_stream(
     max_files_per_trigger: int = 2,
 ) -> str:
     """Durable form of ``conversation_state_stream``: the update stream
-    appends to ``<out_dir>/conv_state`` parquet through ``foreachBatch``
-    with per-batch signed commit markers, so kill-and-resume (checkpoint
-    replay, checkpoint wipe, partial failure between append and marker)
-    never duplicates or drops an update batch — the replay story st1's
-    sink path has, now for the stateful operator. Returns the conv_state
-    directory; collapse it with ``final_conversation_state``."""
+    lands in ``<out_dir>/conv_state`` through the micro-batch commit
+    protocol of ``markers.py`` (``_append_once`` per batch), so
+    kill-and-resume never duplicates or drops an update batch. Returns the
+    conv_state directory; collapse it with ``final_conversation_state``."""
     import os
+
+    from .markers import drain, new_generation
 
     checkpoint = os.path.join(out_dir, "_checkpoint")
     dest = os.path.join(out_dir, "conv_state")
-    # New-generation detection (r5 review; twin of run_stream's): the
-    # checkpoint WAL precedes any marker, so checkpoint-absent + state
-    # present means a wipe/relocation — clear the previous generation
-    # entirely. This also covers the cases the in-_append_once batch-0
-    # signature heuristic can't see: an old/new generation sharing an
-    # identical batch-0 prefix, and a legacy empty batch-0 marker that
-    # matches any signature.
-    if not os.path.isdir(checkpoint):
-        import shutil
-
-        shutil.rmtree(dest, ignore_errors=True)
+    # the guard also covers what _append_once's batch-0 rule can't see: an
+    # old and a new generation sharing an identical batch 0, and a legacy
+    # empty batch-0 marker that matches any signature
+    new_generation(checkpoint, [dest])
     updates = conversation_state_stream(spark, input_dir, max_files_per_trigger)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -202,14 +180,7 @@ def run_conversation_state_stream(
         finally:
             batch_df.unpersist()
 
-    q = (
-        updates.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates, checkpoint, process_batch, "update")
     return dest
 
 

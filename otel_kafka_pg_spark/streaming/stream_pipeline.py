@@ -14,14 +14,10 @@ of capability:
                                (build_routed) and sink fan-out
                                (write_sinks) as the batch pipeline,
                                appending per sink
-    at-least-once + upsert   → checkpoint replays a failed micro-batch;
-                               per-(sink, batch_id) commit markers make the
-                               replayed appends idempotent — a sink that
-                               already committed batch N is skipped, so a
-                               failure between sink writes cannot duplicate
-                               rows on restart (effectively-once at batch
-                               granularity; parquet's output committer makes
-                               each single append atomic)
+    at-least-once + upsert   → the micro-batch commit protocol of
+                               ``markers.py`` (checkpoint replay, generation
+                               guard, signed per-(sink, batch) markers):
+                               effectively-once at batch granularity
     batch-insert count logs  → per-batch sink_counts appends; totals are a
                                sum over micro-batches (count parity with the
                                batch pipeline is asserted in tests)
@@ -42,6 +38,7 @@ closed buckets.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..operators.route import SINKS
 from ..schemas import TRANSCRIPTS
-from .markers import marker_committed, write_marker
+from .markers import content_signature, drain, marker_committed, new_generation, write_marker
 
 
 # The reference's consumer topology (modules/kafka/consumer/consumer.go):
@@ -111,19 +108,7 @@ def run_stream(
         lookup = spark.createDataFrame(service_lookup_pandas())
 
     checkpoint = os.path.join(out_dir, "_checkpoint")
-    # New-generation detection (r5 review): the checkpoint's offset WAL is
-    # written BEFORE foreachBatch runs, so in any real run sink markers
-    # exist only if the checkpoint dir does. Checkpoint absent + sink state
-    # present therefore means the checkpoint was wiped/relocated — batch
-    # ids restart at 0 over possibly different input, and appending beside
-    # the previous generation would silently double-count (sink_counts
-    # rows are aggregates with no dedup identity). Automate the documented
-    # "markers and checkpoint belong together" contract: clear the sinks.
-    if not os.path.isdir(checkpoint):
-        import shutil
-
-        for name in SINKS:
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
+    new_generation(checkpoint, [os.path.join(out_dir, name) for name in SINKS])
     if source_format == "kafka":
         stream = _kafka_turn_stream(spark, kafka_options or {})
     else:
@@ -136,57 +121,16 @@ def run_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # identical semantics to the batch pipeline: the micro-batch frame
         # is a plain DataFrame, so the whole DAG (parse, broadcast enrich,
-        # route, attributes) and the sink fan-out apply unchanged
-        import hashlib
-
-        # content signature of the micro-batch's source: for the file
-        # source this is the sorted input-file list. A replayed batch is
-        # skipped ONLY when both batch_id and signature match — if the
-        # checkpoint was wiped/relocated while sink markers remained,
-        # replayed batch ids restart at 0 with DIFFERENT inputs and must be
-        # processed, not silently dropped (ADVICE r2). Markers and
-        # checkpoint still belong together: wipe both to reprocess from
-        # scratch. Sources without file lineage (kafka: inputFiles() is
-        # empty) sign the batch CONTENT instead — count + an
-        # order-insensitive hash over the natural key, one cheap agg on a
-        # frame about to be fully processed anyway; a batch_id-only
-        # signature would make stale markers match the re-numbered batches
-        # a checkpoint wipe produces, silently dropping their records.
-        # The combiner is SUM of per-row hashes (in decimal(38,0): an ANSI
-        # bigint sum could overflow-error), NOT bit_xor: xor cancels
-        # duplicated keys pairwise ({B,A,A} xors to hash(B) alone), so two
-        # different batches sharing one unduplicated row would collide —
-        # and Kafka redelivery makes repeated (conv_id, turn_idx) pairs
-        # realistic. The key encoding tags each field and gives NULL its
-        # own sentinel because concat_ws silently drops NULLs, which would
-        # make (a, NULL) and (NULL, a) hash identically.
+        # route, attributes) and the sink fan-out apply unchanged. The file
+        # source signs a batch by its input-file list; a source without
+        # file lineage (kafka: inputFiles() is empty) by its natural keys.
         files = sorted(batch_df.inputFiles())
         if files:
-            sig_src = "\n".join(files)
+            input_sig = hashlib.sha256("\n".join(files).encode()).hexdigest()
         else:
-            key = F.concat(
-                F.lit("c="),
-                F.coalesce(F.col("conv_id").cast("string"), F.lit("\x00null")),
-                F.lit("|t="),
-                F.coalesce(F.col("turn_idx").cast("string"), F.lit("\x00null")),
-            )
-            m = batch_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64(key).cast("decimal(38,0)")),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("h"),
-            ).collect()[0]
-            sig_src = f"batch:{batch_id}:{m['n']}:{m['h']}"
-        input_sig = hashlib.sha256(sig_src.encode()).hexdigest()
-        # idempotent replay: a sink that already committed this batch
-        # (marker present with the same input signature) is skipped, so a
-        # checkpoint-replayed batch after a failure between sink writes
-        # re-appends only to the sinks that had not committed. A crash
-        # between append-commit and marker-write re-appends that one sink;
-        # the marker is written immediately after the commit so the window
-        # is one filesystem call wide, and the deterministic row IDs let
-        # any downstream dedup close it.
+            input_sig = content_signature(batch_df, ("conv_id", "turn_idx"))
+        # a sink that already committed this batch is skipped, so a replay
+        # after a failure between sink writes appends only to the others
         pending = [s for s in SINKS if not marker_committed(os.path.join(out_dir, s), batch_id, input_sig)]
 
         def append(name: str, frame: DataFrame) -> None:
@@ -197,13 +141,7 @@ def run_stream(
         if pending:
             write_sinks(spark, build_routed(spark, batch_df, lookup), pending, append)
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, process_batch)
 
 
 def total_sink_counts(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -378,11 +316,10 @@ def stream_upsert(
     """
     from pyspark.sql import Window
 
-    from ..plans.sinks import atomic_swap, recover_interrupted_swap
+    from ..plans.sinks import _presence_merge, atomic_swap, recover_interrupted_swap
 
     if schema is None:
         schema = spark.read.parquet(input_dir).schema
-    checkpoint = dest.rstrip("/") + "_checkpoint"
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -400,34 +337,24 @@ def stream_upsert(
         if not os.path.exists(dest):
             upd.write.mode("overwrite").parquet(dest)
             return
-        base = spark.read.parquet(dest).withColumn("_b_present", F.lit(True))
-        cols = [c for c in base.columns if c not in (key, "_b_present")]
-        u = upd.select(key, *[F.col(c).alias(f"_u_{c}") for c in cols])
-        uord = F.struct(*[F.col(f"_u_{c}") for c in order_cols])
-        bord = F.struct(*[F.col(c) for c in order_cols])
+        base = spark.read.parquet(dest)
+        uord = F.struct(*[F.col(f"u.{c}") for c in order_cols])
+        bord = F.struct(*[F.col(f"b.{c}") for c in order_cols])
         # a BRAND-NEW key always takes the update row — even with a NULL
         # order column — matching what the first-batch write path would
         # have persisted for the same row (without the presence flag, a
         # new key with NULL order_cols[0] would insert an all-NULL payload)
-        take_u = F.col("_b_present").isNull() | (
-            F.col(f"_u_{order_cols[0]}").isNotNull()
-            & (F.col(order_cols[0]).isNull() | (uord >= bord))
+        newer = F.col("b._present").isNull() | (
+            F.col(f"u.{order_cols[0]}").isNotNull()
+            & (F.col(f"b.{order_cols[0]}").isNull() | (uord >= bord))
         )
-        merged = base.join(u, key, "full_outer").select(
-            key, *[F.when(take_u, F.col(f"_u_{c}")).otherwise(F.col(c)).alias(c) for c in cols]
-        )
+        merged = _presence_merge(base, upd, key, [c for c in base.columns if c != key], newer)
         tmp = dest.rstrip("/") + ".rewrite.tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         merged.write.mode("overwrite").parquet(tmp)  # materialized before any rename
         atomic_swap(tmp, dest)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, dest.rstrip("/") + "_checkpoint", apply_batch)
 
 
 def streaming_hourly_type_counts(

@@ -20,6 +20,21 @@ from otel_kafka_pg_spark.plans.sinks import (
 SF = "/root/testdata/sf0.01"
 
 
+def test_content_hash_tells_null_positions_apart(spark):
+    """Spark's xxhash64 skips NULL inputs, so a row hash over the raw
+    columns made ("c1", 5, "x", NULL) and ("c1", 5, NULL, "x") collide: a
+    manifest (and a stream's content-signed marker) could not tell two
+    sinks apart that differ only in which column is NULL."""
+    schema = "conv_id string, n long, a string, b string"
+    left = spark.createDataFrame([("c1", 5, "x", None)], schema)
+    right = spark.createDataFrame([("c1", 5, None, "x")], schema)
+    assert content_hash(left) != content_hash(right)
+
+    from otel_kafka_pg_spark.streaming.markers import content_signature
+
+    assert content_signature(left, left.columns) != content_signature(right, right.columns)
+
+
 def test_merge_upsert_semantics(spark):
     base = spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)], "id int, value double")
     upd = spark.createDataFrame([(2, 99.0), (4, 40.0)], "id int, value double")
