@@ -15,9 +15,9 @@ Local smoke (synthesizes input if --input omitted)::
 
 On a real cluster the session comes from spark-submit's conf (master,
 executors); the local[] fallback only engages when no active session
-exists. Re-running with the same --input/--output resumes: sinks already
-complete for the same input fingerprint are skipped (checkpoint manifest,
-idempotent by deterministic row IDs).
+exists. Re-running with the same --input/--output resumes: sinks whose
+commit stamp matches the input fingerprint are skipped, the rest are
+rewritten (idempotent by deterministic row IDs; see ``run_pipeline``).
 """
 
 from __future__ import annotations

@@ -3,12 +3,12 @@ dedup → cluster-resolved near-dup dedup → stratified sample → sequence
 packing.
 
 This is the LLM-training-data pipeline the registry's dp4 entry runs as
-one oracled query, factored into per-stage functions so the spark-submit
-job (``jobs/corpus_prep.py``) can persist each stage's keep-set and
-resume any suffix of the chain from disk, while the registry composes
-the same functions end-to-end — the CLI cannot drift from the
-driver-verified chain. Stage parameters default to dp4's oracle-pinned
-values.
+one oracled query, factored into per-stage functions so ``run_corpus_prep``
+(the spark-submit job ``jobs/corpus_prep.py`` calls it) can persist each
+stage's keep-set and resume any suffix of the chain from disk, while the
+registry composes the same functions end-to-end — the job cannot drift
+from the driver-verified chain. Stage parameters default to dp4's
+oracle-pinned values.
 
 Scale shape (unchanged from the per-operator analyses in SURVEY.md):
 every stage is linear — the quality gate and token counts are pure JVM
@@ -22,6 +22,9 @@ rejoined against the source instead of materializing text copies.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,6 +32,7 @@ from ..functions import text as tx
 from ..operators.corpus import stratified_sample
 from ..operators.dedup import exact_dedup, minhash_lsh_pairs
 from ..operators.graph import duplicate_clusters
+from .manifest import atomic_write, commit_output, committed_output, input_fingerprint
 
 
 def quality_gate(
@@ -131,3 +135,85 @@ def corpus_prep_stages(
     )
     packed = pack_bins(docs, sample, shard_size, token_budget)
     return {"gated": gated, "kept": kept, "reps": reps, "sample": sample, "packed": packed}
+
+
+def run_corpus_prep(
+    spark: SparkSession,
+    input_path: str,
+    out_dir: str,
+    quality_min: float = 0.5,
+    quality: str = "heuristic",
+    near_threshold: float = 0.6,
+    per_stratum: int = 25,
+    sample: str = "stratified",
+    mixture_total: int = 200,
+    shard_size: int = 128,
+    token_budget: int = 512,
+    resume: bool = True,
+) -> dict:
+    """Run the chain over the documents at ``input_path``, persisting each
+    stage under ``out_dir/<stage>`` (a doc_id list; ``packed`` holds the
+    bins), and return the run manifest (also saved as
+    ``out_dir/manifest.json``): per-stage counts and lineage, and
+    ``resumed_stages``.
+
+    Every stage commits through ``plans/manifest.commit_output``, stamped
+    with the fingerprint of the input and ALL parameters, so a job killed
+    after the expensive near-dup stage restarts at the sample, not at zero
+    — resume reads only the stamps, never the end-of-run manifest. A
+    changed input or parameter invalidates every stage (each depends on
+    all parameters upstream of it, and stage params are all-or-nothing
+    here). ``quality`` and ``sample`` pick the stage definitions (see
+    ``quality_gate`` and ``quota_sample``)."""
+    # knobs that the chosen method ignores are normalized OUT of the resume
+    # fingerprint — changing quality_min under quality="gopher" (which
+    # ignores it) must not invalidate every stage stamp
+    params = {
+        "quality_min": quality_min if quality == "heuristic" else None,
+        "quality": quality,
+        "near_threshold": near_threshold,
+        "per_stratum": per_stratum if sample == "stratified" else None,
+        "sample": sample,
+        "mixture_total": mixture_total if sample == "mixture" else None,
+        "shard_size": shard_size,
+        "token_budget": token_budget,
+    }
+    fp = f"{input_fingerprint(input_path)}::{json.dumps(params, sort_keys=True)}"
+    docs = spark.read.parquet(input_path)
+    counts: dict[str, int] = {"input": docs.count()}
+    lineage: dict[str, list] = {}
+    resumed: list[str] = []
+
+    def load_or_build(name: str, build) -> DataFrame:
+        dest = os.path.join(out_dir, name)
+        entry = committed_output(dest, fp) if resume else None
+        if entry is not None:
+            resumed.append(name)
+        else:
+            frame = build()
+            entry = commit_output(frame if name == "packed" else frame.select("doc_id"), dest, fp)
+        counts[name], lineage[name] = entry["rows"], entry["lineage"]
+        return spark.read.parquet(dest)
+
+    # stage handoffs are id lists; rejoin the source for stages that need text
+    gated = load_or_build("gated", lambda: quality_gate(docs, quality_min, method=quality))
+    kept = load_or_build("kept", lambda: exact_keep(docs.join(gated, "doc_id")))
+    reps = load_or_build("reps", lambda: near_dup_reps(docs.join(kept, "doc_id"), near_threshold))
+    picked = load_or_build(
+        "sample",
+        lambda: quota_sample(docs, reps, per_stratum, method=sample, mixture_total=mixture_total),
+    )
+    packed = load_or_build("packed", lambda: pack_bins(docs, picked, shard_size, token_budget))
+
+    counts["packed_bins"] = counts.pop("packed")
+    manifest = {
+        "input": input_path,
+        "fingerprint": fp,
+        "params": params,
+        "counts": {**counts, "packed": counts["packed_bins"]},
+        "resumed_stages": resumed,
+        "total_tokens": packed.agg({"total_tokens": "sum"}).collect()[0][0],
+        "lineage": lineage,
+    }
+    atomic_write(os.path.join(out_dir, "manifest.json"), json.dumps(manifest, default=str))
+    return manifest

@@ -1,13 +1,20 @@
-"""Checkpoint manifest: per-partition lineage + row counts + content hashes.
+"""Batch commit path: per-output stamps, lineage, row counts, content hashes.
 
 The reference gets at-least-once delivery from Kafka auto-commit plus
 re-buffer-on-failure (reference: consumer.go:91-92, :306-324) and converts
 it to effectively-once via primary-key upserts (log/repository/
-repository.go:67-88). Our batch analog: deterministic row IDs + a JSON
-manifest recording, per sink, the row count, an order-insensitive content
-hash, and per-Spark-partition lineage. A resumed run skips sinks already
-marked complete for the same input fingerprint — idempotent resume of
-partially completed routes.
+repository.go:67-88). Our batch analog: deterministic row IDs, and one rule
+for "this output is done for this input" shared by every batch job
+(``run_pipeline``'s sinks, ``run_corpus_prep``'s stages):
+``commit_output`` overwrites the output directory and then atomically
+stamps it (``_stage.json``: input fingerprint, row count, order-insensitive
+content hash, per-partition lineage); ``committed_output`` trusts a
+directory only when its stamp is readable, its fingerprint matches and
+Spark's ``_SUCCESS`` marker is present. A resumed run rewrites exactly the
+outputs without such a stamp: a crashed write, a deleted directory or a
+different input never short-circuits, and no shared file is updated
+concurrently. The overwrite removes the old stamp before the new data
+lands, so a stamp always describes the data beside it.
 
 The content hash is ``bit_xor(row_hash(row))`` — commutative, so it is
 independent of partitioning and task scheduling; two datasets hash equal iff
@@ -21,12 +28,14 @@ import functools
 import json
 import logging
 import os
+import time
 import uuid
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_manifest.json"
+STAMP_NAME = "_stage.json"
 
 log = logging.getLogger(__name__)
 
@@ -123,18 +132,6 @@ def parquet_file_lineage(dest: str) -> list[dict]:
     ]
 
 
-def manifest_path(out_dir: str) -> str:
-    return os.path.join(out_dir, MANIFEST_NAME)
-
-
-def load_manifest(out_dir: str) -> dict:
-    p = manifest_path(out_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"input_fingerprint": None, "sinks": {}}
-
-
 def atomic_write(path: str, text: str) -> None:
     """Write a small file atomically (unique tmp beside it + ``os.replace``):
     a kill mid-write leaves the old file or none, never a torn one. The tmp
@@ -149,7 +146,40 @@ def atomic_write(path: str, text: str) -> None:
 
 
 def save_manifest(out_dir: str, manifest: dict) -> None:
-    atomic_write(manifest_path(out_dir), json.dumps(manifest, indent=1, sort_keys=True))
+    atomic_write(os.path.join(out_dir, MANIFEST_NAME), json.dumps(manifest, indent=1, sort_keys=True))
+
+
+def commit_output(frame: DataFrame, dest: str, fingerprint: str) -> dict:
+    """Overwrite ``dest`` with ``frame`` and stamp it committed for
+    ``fingerprint``; return its entry (rows, content hash, path, lineage
+    and ``write_s``, the wall time of the write). The stamp is written
+    after the parquet commit and atomically, so a kill leaves either no
+    stamp or a whole one."""
+    t0 = time.monotonic()
+    rows, chash, lineage = write_with_summary(frame, dest)
+    entry = {"rows": rows, "content_hash": chash, "path": dest, "lineage": lineage,
+             "write_s": time.monotonic() - t0}
+    atomic_write(os.path.join(dest, STAMP_NAME), json.dumps({"fingerprint": fingerprint, **entry}))
+    return entry
+
+
+def committed_output(dest: str, fingerprint: str) -> dict | None:
+    """The entry ``commit_output`` stored in ``dest``, or None unless the
+    directory committed (``_SUCCESS``) and carries a readable stamp for
+    ``fingerprint``."""
+    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+        return None
+    try:
+        with open(os.path.join(dest, STAMP_NAME)) as f:
+            entry = json.load(f)
+    except (OSError, ValueError):
+        # missing or torn stamp → rewrite. ValueError covers both
+        # JSONDecodeError (truncated write) and UnicodeDecodeError
+        # (byte-corrupted file), which is not a JSONDecodeError
+        return None
+    if entry.pop("fingerprint", None) != fingerprint:
+        return None
+    return entry
 
 
 def input_fingerprint(path: str) -> str:

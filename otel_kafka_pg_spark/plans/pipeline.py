@@ -11,7 +11,7 @@ consumer.go:162-329). One lazily-built DAG:
       → canonical attributes JSON                             [one render per row]
       → persist the sink-read columns                         [one scan, 4 sinks]
       → per-sink filtered write + per-sink aggregate counts   [flush + count logs]
-      → manifest entry per sink                               [checkpoint/lineage]
+      → commit stamp per sink, run summary                    [checkpoint/lineage]
 
 Scale notes (the plan that must survive 1000 executors / 100 TB):
 - everything before the sinks is one narrow pipelined stage per scan
@@ -31,13 +31,15 @@ Scale notes (the plan that must survive 1000 executors / 100 TB):
   job, the way the reference flushes each signal type's batch on its own
   (consumer.go:302,316). A single-sink resume skips the cache.
 - writes are per-sink parquet (Iceberg-ready: swap the writer for
-  ``writeTo(...).append()`` — the manifest/resume logic is sink-agnostic).
+  ``writeTo(...).append()``). Resume is per sink: each commits through
+  ``plans/manifest.commit_output`` and is skipped on a rerun while its
+  stamp matches the input (``committed_output``); the corpus job resumes
+  its stages by the same rule.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -49,12 +51,7 @@ from ..operators.enrich import enrich_with_lookup
 from ..operators.order import salted_repartition
 from ..operators.route import SINK_BUILDERS, SINK_COLUMNS, SINKS, classify_signal, with_attributes
 from ..sources.synth import service_lookup_pandas
-from .manifest import (
-    input_fingerprint,
-    load_manifest,
-    save_manifest,
-    write_with_summary,
-)
+from .manifest import commit_output, committed_output, input_fingerprint, save_manifest
 
 
 def _lookup_fingerprint(lookup) -> str:
@@ -66,7 +63,7 @@ def _lookup_fingerprint(lookup) -> str:
     (sources/synth.py) and can change between versions, which is exactly
     the mixed-enrich resume this guard exists for. Same content → same
     fingerprint regardless of which frame type carried it, so an explicit
-    copy of the default resumes a default-run manifest. The lookup is the
+    copy of the default resumes a default run's sinks. The lookup is the
     broadcast side — collecting its few rows here is bounded by the same
     contract that makes the join a broadcast join."""
     import hashlib
@@ -116,72 +113,49 @@ def run_pipeline(
     salt_buckets: int = 0,
     resume: bool = True,
 ) -> dict:
-    """Run the pipeline end-to-end with manifest checkpointing.
+    """Run the pipeline end-to-end; return the run summary, also saved as
+    ``out_dir/_manifest.json``.
 
-    Returns the manifest. With ``resume=True``, sinks already completed for
-    the same input fingerprint are skipped (idempotent resume of partially
-    completed routes). The first pending sink is written alone; the others
-    then run concurrently, and each is saved to the manifest as it
-    completes, with the wall time of its write as ``write_s``.
+    Each sink commits through ``commit_output`` (write, then its own stamp).
+    With ``resume=True``, sinks whose stamp matches this input and lookup
+    are kept (idempotent resume of partially completed routes; a deleted or
+    half-written sink directory has no stamp and is rewritten). The first
+    pending sink is written alone; the others then run concurrently. The
+    summary holds every sink's entry, with ``write_s`` the wall time of
+    its write.
     """
     fp = input_fingerprint(input_path)
     fp += "|lookup:" + _lookup_fingerprint(lookup if lookup is not None else service_lookup_pandas())
-    manifest = load_manifest(out_dir) if resume else {"input_fingerprint": None, "sinks": {}}
-    # older versions could leave a onepass-layout manifest (one
-    # partitionBy(signal_type) write) that marks the SAME sinks "complete"
-    # but never wrote the per-sink directories — treat it like a
-    # fingerprint mismatch, otherwise a resume over it returns success
-    # without writing anything
-    if manifest.get("input_fingerprint") != fp or manifest.get("layout") == "onepass":
-        manifest = {"input_fingerprint": fp, "sinks": {}}
-
-    pending = [s for s in SINKS if manifest["sinks"].get(s, {}).get("status") != "complete"]
-    if not pending:
-        return manifest
-
-    routed = build_routed(spark, spark.read.parquet(input_path), lookup, salt_buckets)
-    lock = threading.Lock()
-
-    def save_sink(sink_name: str, frame: DataFrame) -> None:
-        dest = os.path.join(out_dir, sink_name)
-        w0 = time.monotonic()
-        rows, chash, lineage = write_with_summary(frame, dest)
-        entry = {
-            "status": "complete",
-            "rows": rows,
-            "content_hash": chash,
-            "path": dest,
-            "lineage": lineage,
-            "write_s": time.monotonic() - w0,
-        }
-        with lock:
-            manifest["sinks"][sink_name] = entry
-            save_manifest(out_dir, manifest)
+    dests = {s: os.path.join(out_dir, s) for s in SINKS}
+    sinks = {s: committed_output(d, fp) if resume else None for s, d in dests.items()}
+    pending = [s for s, entry in sinks.items() if entry is None]
 
     t0 = time.monotonic()
-    write_sinks(spark, routed, pending, save_sink)
+    if pending:
+        routed = build_routed(spark, spark.read.parquet(input_path), lookup, salt_buckets)
+
+        def save_sink(sink_name: str, frame: DataFrame) -> None:
+            sinks[sink_name] = commit_output(frame, dests[sink_name], fp)
+
+        write_sinks(spark, routed, pending, save_sink)
+    elapsed = time.monotonic() - t0
     # routing is exclusive and exhaustive (trace|metric|log), so the input
     # row count is exactly the sum of the three sink row counts — no
     # separate count job over the routed frame
-    input_rows = sum(manifest["sinks"][s]["rows"] for s in SINK_BUILDERS if s in manifest["sinks"])
-    for s in manifest["sinks"].values():
-        s["input_rows"] = input_rows
-    manifest["elapsed_sec"] = time.monotonic() - t0
+    input_rows = sum(sinks[s]["rows"] for s in SINK_BUILDERS)
+    manifest = {
+        "input_fingerprint": fp,
+        "elapsed_sec": elapsed,
+        "sinks": {s: {"status": "complete", **e, "input_rows": input_rows} for s, e in sinks.items()},
+    }
     # turns_per_sec is only meaningful when THIS invocation wrote every
     # sink: on a partial resume, input_rows counts rows written by
     # previous runs while elapsed_sec covers only the resumed tail, so
     # the ratio would be inflated — record the resumed state instead
     if set(pending) >= set(SINK_BUILDERS):
-        manifest["turns_per_sec"] = (
-            input_rows / manifest["elapsed_sec"] if manifest["elapsed_sec"] else None
-        )
-        manifest.pop("resumed_partial", None)
+        manifest["turns_per_sec"] = input_rows / elapsed if elapsed else None
     else:
-        manifest["resumed_partial"] = {
-            "sinks_this_run": sorted(pending),
-            "elapsed_sec_this_run": manifest["elapsed_sec"],
-        }
-        manifest.pop("turns_per_sec", None)
+        manifest["resumed_partial"] = {"sinks_this_run": sorted(pending), "elapsed_sec_this_run": elapsed}
     save_manifest(out_dir, manifest)
     return manifest
 

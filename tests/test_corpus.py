@@ -101,23 +101,20 @@ def test_lang_id_cjk_fallback(spark):
 
 
 def test_corpus_prep_job_matches_registry_dp4(spark, sf_dir, tmp_path_factory):
-    """The spark-submit corpus job and the driver-verified dp4 registry
-    entry share ONE chain definition (plans/corpus_prep.py) — the CLI's
-    packed output must equal dp4's frame exactly, and the manifest's
+    """The corpus job's run_corpus_prep and the driver-verified dp4
+    registry entry share ONE chain definition (plans/corpus_prep.py) — the
+    job's packed output must equal dp4's frame exactly, and the manifest's
     stage counts must be internally consistent (monotone keep-sets)."""
-    import json
     import os
-    import subprocess
-    import sys
+
+    from otel_kafka_pg_spark.plans.corpus_prep import run_corpus_prep
 
     out = str(tmp_path_factory.mktemp("corpus_job"))
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "corpus_prep.py"),
-         "--input", os.path.join(sf_dir, "documents.parquet"), "--output", out],
-        capture_output=True, text=True, check=True,
-    )
-    manifest = json.loads(proc.stdout.strip().splitlines()[-1])
+
+    def run(**params):
+        return run_corpus_prep(spark, os.path.join(sf_dir, "documents.parquet"), out, **params)
+
+    manifest = run()
     c = manifest["counts"]
     assert c["input"] >= c["gated"] >= c["kept"] >= c["reps"] >= c["sample"]
     assert c["sample"] > 0 and c["packed_bins"] > 0
@@ -137,15 +134,11 @@ def test_corpus_prep_job_matches_registry_dp4(spark, sf_dir, tmp_path_factory):
     # the tail stages, the prefix is reused and the rebuilt tail is identical
     import shutil
 
-    cmd = [sys.executable, os.path.join(repo, "jobs", "corpus_prep.py"),
-           "--input", os.path.join(sf_dir, "documents.parquet"), "--output", out]
-    m2 = json.loads(subprocess.run(cmd, capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    m2 = run()
     assert m2["resumed_stages"] == ["gated", "kept", "reps", "sample", "packed"]
     shutil.rmtree(os.path.join(out, "sample"))
     shutil.rmtree(os.path.join(out, "packed"))
-    m3 = json.loads(subprocess.run(cmd, capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    m3 = run()
     assert m3["resumed_stages"] == ["gated", "kept", "reps"]
     assert m3["counts"] == m2["counts"]
     rebuilt = spark.read.parquet(os.path.join(out, "packed"))
@@ -155,8 +148,7 @@ def test_corpus_prep_job_matches_registry_dp4(spark, sf_dir, tmp_path_factory):
     # deleting it (a job killed before the manifest write) must still reuse
     # every stamped stage
     os.remove(os.path.join(out, "manifest.json"))
-    m4 = json.loads(subprocess.run(cmd, capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    m4 = run()
     assert m4["resumed_stages"] == ["gated", "kept", "reps", "sample", "packed"]
     assert m4["counts"] == m2["counts"]
 
@@ -164,13 +156,10 @@ def test_corpus_prep_job_matches_registry_dp4(spark, sf_dir, tmp_path_factory):
     # reuse any stage stamped under the old fingerprint — and a subsequent
     # run with the ORIGINAL params must not reuse the changed run's outputs
     # (stage dirs are stamped per-fingerprint, not trusted by existence)
-    cmd_changed = cmd + ["--per-stratum", "7"]
-    m5 = json.loads(subprocess.run(cmd_changed, capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    m5 = run(per_stratum=7)
     assert m5["resumed_stages"] == []
     assert m5["counts"]["sample"] < m2["counts"]["sample"]
-    m6 = json.loads(subprocess.run(cmd, capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    m6 = run()
     assert m6["resumed_stages"] == []
     assert m6["counts"] == m2["counts"]
 
@@ -179,8 +168,7 @@ def test_corpus_prep_job_matches_registry_dp4(spark, sf_dir, tmp_path_factory):
     # written atomically now, but an old torn stamp must also be survivable)
     with open(os.path.join(out, "gated", "_stage.json"), "w") as fh:
         fh.write('{"fingerprint": "torn')  # truncated JSON
-    m7 = json.loads(subprocess.run(cmd, capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    m7 = run()
     assert "gated" not in m7["resumed_stages"]  # torn → rebuilt
     assert m7["counts"] == m2["counts"]
 
@@ -207,27 +195,22 @@ def test_mixture_sample_flattens_skewed_sources(spark):
 
 
 def test_corpus_prep_job_gopher_mixture_variants(spark, sf_dir, tmp_path_factory):
-    """--quality gopher / --sample mixture swap stages for the t8/sm2
+    """quality="gopher" / sample="mixture" swap stages for the t8/sm2
     driver-verified definitions; stage counts must equal direct operator
     invocation, and the variant fingerprint must not reuse default-run
     stamps."""
-    import json
     import os
-    import subprocess
-    import sys
-
-    from pyspark.sql import functions as F
 
     from otel_kafka_pg_spark.operators.corpus import gopher_filter, mixture_sample
-    from otel_kafka_pg_spark.operators.dedup import exact_dedup
+    from otel_kafka_pg_spark.plans.corpus_prep import run_corpus_prep
 
     out = str(tmp_path_factory.mktemp("corpus_job_v2"))
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    cmd = [sys.executable, os.path.join(repo, "jobs", "corpus_prep.py"),
-           "--input", os.path.join(sf_dir, "documents.parquet"), "--output", out,
-           "--quality", "gopher", "--sample", "mixture", "--mixture-total", "30"]
-    m = json.loads(subprocess.run(cmd, capture_output=True, text=True, check=True)
-                   .stdout.strip().splitlines()[-1])
+
+    def run(**params):
+        return run_corpus_prep(spark, os.path.join(sf_dir, "documents.parquet"), out, **params)
+
+    variant = {"quality": "gopher", "sample": "mixture", "mixture_total": 30}
+    m = run(**variant)
     c = m["counts"]
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     assert c["gated"] == gopher_filter(docs).filter("keep").count()
@@ -236,17 +219,13 @@ def test_corpus_prep_job_gopher_mixture_variants(spark, sf_dir, tmp_path_factory
     reps = spark.read.parquet(os.path.join(out, "reps"))
     expect = mixture_sample(docs.join(reps, "doc_id"), strata_col="lang", total=30)
     assert c["sample"] == expect.count()
-    # knobs inert for the chosen methods (--per-stratum under mixture,
-    # --quality-min under gopher) are normalized out of the fingerprint:
+    # knobs inert for the chosen methods (per_stratum under mixture,
+    # quality_min under gopher) are normalized out of the fingerprint:
     # changing them must NOT invalidate the stamps
-    m1b = json.loads(
-        subprocess.run(cmd + ["--per-stratum", "7", "--quality-min", "0.9"],
-                       capture_output=True, text=True, check=True)
-        .stdout.strip().splitlines()[-1])
+    m1b = run(**variant, per_stratum=7, quality_min=0.9)
     assert m1b["resumed_stages"] == ["gated", "kept", "reps", "sample", "packed"]
-    # the variant is a different fingerprint: a default-flag run reuses nothing
-    m2 = json.loads(subprocess.run(cmd[:6], capture_output=True, text=True, check=True)
-                    .stdout.strip().splitlines()[-1])
+    # the variant is a different fingerprint: a default run reuses nothing
+    m2 = run()
     assert m2["resumed_stages"] == []
 
 
@@ -671,8 +650,9 @@ def test_corpus_job_kill_after_stage2_resumes_identically_at_sf01(spark, tmp_pat
     the spark-submit job right after stage 2 of 5 ("kept") stamps, re-run,
     and require (a) the stamped prefix is reused, (b) the rebuilt tail is
     byte-identical to the driver-verified dp4 chain on the same input.
-    The sf0.01 twin (above) proves CLI==dp4; this proves the resume logic
-    holds at the scale the stamps were designed for."""
+    The sf0.01 twin (above) proves run_corpus_prep==dp4 in process; this
+    proves the resume logic holds at the scale the stamps were designed
+    for, through the CLI's own argument wiring."""
     import json
     import os
     import signal

@@ -10,11 +10,14 @@
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 
 import pandas as pd
 import pytest
 
+from otel_kafka_pg_spark.operators.route import SINKS
 from otel_kafka_pg_spark.plans import pipeline
 from otel_kafka_pg_spark.plans.pipeline import run_pipeline
 from otel_kafka_pg_spark.schemas import LOGS_SINK, METRICS_SINK, SINK_COUNTS, TRACES_SINK
@@ -75,17 +78,28 @@ def test_determinism_rerun_same_hashes(spark, transcripts_path, pipe_out, tmp_pa
 
 
 def _fail_after_sink(monkeypatch, sink):
-    """Crash between sink writes: the first manifest save that records
-    ``sink`` completes, then raises."""
-    real_save, fired = pipeline.save_manifest, []
+    """Crash between sink writes: ``sink``'s commit (write + stamp)
+    completes, then raises."""
+    real_commit, fired = pipeline.commit_output, []
 
-    def save_then_fail(out_dir, manifest):
-        real_save(out_dir, manifest)
-        if sink in manifest["sinks"] and not fired:
+    def commit_then_fail(frame, dest, fingerprint):
+        entry = real_commit(frame, dest, fingerprint)
+        if os.path.basename(dest) == sink and not fired:
             fired.append(sink)
             raise RuntimeError(f"injected failure after sink {sink}")
+        return entry
 
-    monkeypatch.setattr(pipeline, "save_manifest", save_then_fail)
+    monkeypatch.setattr(pipeline, "commit_output", commit_then_fail)
+
+
+def _committed(out, transcripts_path):
+    """Sink name → stamp entry, for the sinks of ``out`` committed for this
+    input and the default lookup."""
+    from otel_kafka_pg_spark.plans.manifest import committed_output, input_fingerprint
+
+    fp = input_fingerprint(transcripts_path) + "|lookup:" + pipeline._lookup_fingerprint(service_lookup_pandas())
+    entries = {s: committed_output(os.path.join(out, s), fp) for s in SINKS}
+    return {s: e for s, e in entries.items() if e is not None}
 
 
 def test_idempotent_resume_after_partial_failure(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
@@ -94,42 +108,33 @@ def test_idempotent_resume_after_partial_failure(spark, transcripts_path, pipe_o
     _fail_after_sink(monkeypatch, "traces")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, transcripts_path, out)
-    # traces completed before the crash; logs/metrics/counts did not
-    from otel_kafka_pg_spark.plans.manifest import load_manifest
+    # traces committed before the crash; logs/metrics/counts did not
+    assert set(_committed(out, transcripts_path)) == {"traces"}
 
-    partial = load_manifest(out)
-    assert partial["sinks"]["traces"]["status"] == "complete"
-    assert "logs" not in partial["sinks"]
-
-    resumed = run_pipeline(spark, transcripts_path, out)  # resume from manifest
+    resumed = run_pipeline(spark, transcripts_path, out)  # resume from the stamps
     for sink in ("traces", "logs", "metrics", "sink_counts"):
         assert resumed["sinks"][sink]["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
 
 
-def _finished_writes_only(spark, manifest):
-    """Every sink the manifest marks complete was written in full."""
-    import os
-
-    for sink, entry in manifest["sinks"].items():
-        assert entry["status"] == "complete", sink
+def _finished_writes_only(spark, committed):
+    """Every sink stamped committed was written in full."""
+    for sink, entry in committed.items():
         assert os.path.exists(os.path.join(entry["path"], "_SUCCESS")), sink
         assert spark.read.parquet(entry["path"]).count() == entry["rows"], sink
 
 
 def test_resume_after_failure_on_a_pooled_sink(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
     """A failure after a sink written from the pool (not the serial
-    first one): the injected failure surfaces from run_pipeline, the
-    manifest holds metrics plus only sinks whose writes finished, and a
+    first one): the injected failure surfaces from run_pipeline, metrics
+    and only sinks whose writes finished are stamped committed, and a
     resume reproduces the full run's hashes."""
-    from otel_kafka_pg_spark.plans.manifest import load_manifest
-
     _, manifest_full = pipe_out
     out = str(tmp_path / "pooled")
     _fail_after_sink(monkeypatch, "metrics")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, transcripts_path, out)
-    partial = load_manifest(out)
-    assert {"traces", "metrics"} <= set(partial["sinks"])
+    partial = _committed(out, transcripts_path)
+    assert {"traces", "metrics"} <= set(partial)
     _finished_writes_only(spark, partial)
     resumed = run_pipeline(spark, transcripts_path, out)
     for sink in ("traces", "logs", "metrics", "sink_counts"):
@@ -139,18 +144,17 @@ def test_resume_after_failure_on_a_pooled_sink(spark, transcripts_path, pipe_out
 
 def test_pooled_sink_error_waits_for_running_writes(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
     """A pooled sink whose builder raises makes run_pipeline raise; the
-    failed sink is absent from the manifest, and the routed frame's cache
-    is released only after every other write has ended."""
+    failed sink is not stamped committed, and the routed frame's cache is
+    released only after every other write has ended."""
     import threading
     import time
 
-    from otel_kafka_pg_spark.operators.route import SINKS
-    from otel_kafka_pg_spark.plans.manifest import load_manifest
+    from otel_kafka_pg_spark.plans import manifest
 
     _, manifest_full = pipe_out
     lock, in_flight, at_unpersist = threading.Lock(), [0], []
     frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
-    real_write, real_unpersist = pipeline.write_with_summary, frame_cls.unpersist
+    real_write, real_unpersist = manifest.write_with_summary, frame_cls.unpersist
 
     def counting_write(df, dest):
         with lock:
@@ -171,17 +175,17 @@ def test_pooled_sink_error_waits_for_running_writes(spark, transcripts_path, pip
         at_unpersist.append(in_flight[0])
         return real_unpersist(self, *a, **kw)
 
-    monkeypatch.setattr(pipeline, "write_with_summary", counting_write)
+    monkeypatch.setattr(manifest, "write_with_summary", counting_write)
     monkeypatch.setitem(SINKS, "logs", broken_logs)
     monkeypatch.setattr(frame_cls, "unpersist", spy_unpersist)
     out = str(tmp_path / "broken")
     with pytest.raises(RuntimeError, match="logs builder broke"):
         pipeline.run_pipeline(spark, transcripts_path, out)
     assert at_unpersist == [0], "the cache was released while a write was still running"
-    partial = load_manifest(out)
-    assert set(partial["sinks"]) == {"traces", "metrics", "sink_counts"}
+    partial = _committed(out, transcripts_path)
+    assert set(partial) == {"traces", "metrics", "sink_counts"}
     _finished_writes_only(spark, partial)
-    for sink, entry in partial["sinks"].items():
+    for sink, entry in partial.items():
         assert entry["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
 
 
@@ -202,22 +206,16 @@ def test_pooled_writes_inherit_the_job_group(spark, transcripts_path, tmp_path):
 
 
 def test_concurrent_manifest_updates_lose_no_sink(spark, transcripts_path, tmp_path, monkeypatch):
-    """Stress the manifest lock: 24 stand-in sinks (more pool threads than
-    cores) whose writes all return at once, released by one barrier, under
-    a shortened switch interval and a jittered file replace. No save may
-    replace the manifest on disk
-    with one that lacks a sink the disk already holds — an older snapshot
-    landing after a newer one would lose a finished sink for a resume after
-    a crash — and the final manifest must hold them all."""
-    import json
-    import os
-    import random
+    """Stress the concurrent commits: 24 stand-in sinks (more pool threads
+    than cores) whose writes all return at once, released by one barrier,
+    under a shortened switch interval. Every sink must end with its own
+    stamp for this input, and the returned summary must hold every entry —
+    a lost update would make a resume after a crash rewrite, or miss, a
+    finished sink."""
     import sys
     import threading
-    import time
 
-    from otel_kafka_pg_spark.operators.route import SINKS
-    from otel_kafka_pg_spark.plans.manifest import MANIFEST_NAME, load_manifest
+    from otel_kafka_pg_spark.plans import manifest as manifest_mod
 
     extra = [f"stress{i:02d}" for i in range(24)]
     for name in extra:
@@ -229,31 +227,20 @@ def test_concurrent_manifest_updates_lose_no_sink(spark, transcripts_path, tmp_p
             barrier.wait()
         return 1, 0, []
 
-    monkeypatch.setattr(pipeline, "write_with_summary", stand_in_write)
-    real_replace, rng, lost = os.replace, random.Random(7), []
-
-    def sinks(path):
-        with open(path) as f:
-            return set(json.load(f)["sinks"])
-
-    def checked_replace(src, dst):
-        if str(dst).endswith(MANIFEST_NAME):
-            time.sleep(rng.random() * 0.002)
-            if os.path.exists(dst):
-                lost.extend(sinks(dst) - sinks(src))
-        real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", checked_replace)
+    monkeypatch.setattr(manifest_mod, "write_with_summary", stand_in_write)
+    out = tmp_path / "stress"
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        manifest = pipeline.run_pipeline(spark, transcripts_path, str(tmp_path / "stress"), resume=False)
+        manifest = pipeline.run_pipeline(spark, transcripts_path, str(out), resume=False)
     finally:
         sys.setswitchinterval(interval)
-    assert lost == [], "a save replaced the manifest with an older one"
     expected = {"traces", "logs", "metrics", "sink_counts", *extra}
     assert set(manifest["sinks"]) == expected
-    assert set(load_manifest(str(tmp_path / "stress"))["sinks"]) == expected
+    for name in expected:
+        stamp = json.loads((out / name / manifest_mod.STAMP_NAME).read_text())
+        assert stamp["fingerprint"] == manifest["input_fingerprint"], name
+        assert stamp["path"] == manifest["sinks"][name]["path"] == str(out / name), name
 
 
 def test_manifest_records_per_sink_write_time(pipe_out):
@@ -273,13 +260,32 @@ def test_resume_skips_completed_sinks(spark, transcripts_path, pipe_out):
     }
 
 
+def test_resume_rewrites_a_deleted_sink(spark, transcripts_path, pipe_out, tmp_path):
+    """A sink directory deleted after a complete run is rewritten on
+    resume, with the first run's rows and hash; the other sinks are kept.
+    Resume trusts a sink's own commit stamp, never a run summary that
+    still lists the deleted sink as complete."""
+    _, manifest_full = pipe_out
+    out = str(tmp_path / "deleted")
+    run_pipeline(spark, transcripts_path, out)
+    shutil.rmtree(os.path.join(out, "logs"))
+    resumed = run_pipeline(spark, transcripts_path, out)
+    from otel_kafka_pg_spark.plans.manifest import content_hash
+
+    assert os.path.isdir(os.path.join(out, "logs")), "resume did not rewrite the deleted sink"
+    assert content_hash(spark.read.parquet(os.path.join(out, "logs"))) == (
+        manifest_full["sinks"]["logs"]["rows"], manifest_full["sinks"]["logs"]["content_hash"])
+    assert resumed["resumed_partial"]["sinks_this_run"] == ["logs"]
+    for sink in ("traces", "logs", "metrics", "sink_counts"):
+        assert resumed["sinks"][sink]["rows"] == manifest_full["sinks"][sink]["rows"], sink
+        assert resumed["sinks"][sink]["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
+
+
 def test_multiwrite_resume_over_onepass_layout_rewrites(spark, transcripts_path, tmp_path):
     """Older versions could write a onepass layout: one partitionBy(signal_type)
     write whose manifest marks the same sink names complete for the same
     input fingerprint but never wrote the per-sink directories. Resuming
     run_pipeline over such a manifest must rewrite everything."""
-    import os
-
     from otel_kafka_pg_spark.plans.manifest import input_fingerprint, save_manifest
     from otel_kafka_pg_spark.plans.pipeline import _lookup_fingerprint
 
@@ -412,13 +418,14 @@ def test_default_lookup_is_fingerprinted_for_resume(spark, transcripts_path, tmp
     resume _lookup_fingerprint guards against. Same content through either
     frame type (pandas default vs explicit Spark copy) → same fingerprint
     → clean resume; a different lookup → full rewrite."""
-    from otel_kafka_pg_spark.plans.manifest import load_manifest
+    from otel_kafka_pg_spark.plans.manifest import MANIFEST_NAME
     from otel_kafka_pg_spark.schemas import SERVICE_LOOKUP
     from otel_kafka_pg_spark.sources.synth import service_lookup_pandas
 
     out = str(tmp_path / "deflk")
     manifest = run_pipeline(spark, transcripts_path, out)
-    assert "|lookup:" in load_manifest(out)["input_fingerprint"]
+    with open(os.path.join(out, MANIFEST_NAME)) as f:
+        assert "|lookup:" in json.load(f)["input_fingerprint"]
 
     # explicit Spark copy of the default → fingerprint match → pure resume
     same = spark.createDataFrame(service_lookup_pandas())

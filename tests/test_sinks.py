@@ -35,6 +35,32 @@ def test_content_hash_tells_null_positions_apart(spark):
     assert content_signature(left, left.columns) != content_signature(right, right.columns)
 
 
+def test_write_summary_falls_back_when_footers_disagree(spark, tmp_path, monkeypatch):
+    """When the observed row count and the committed parquet footers
+    disagree (a task retry double-counted the accumulators),
+    write_with_summary recomputes rows and hash from the written files."""
+    from otel_kafka_pg_spark.plans import manifest
+
+    real_lineage, recounts = manifest.parquet_file_lineage, []
+
+    def one_row_short(dest):
+        lineage = real_lineage(dest)
+        lineage[0]["rows"] -= 1
+        return lineage
+
+    def counting_hash(df):
+        recounts.append(1)
+        return content_hash(df)
+
+    monkeypatch.setattr(manifest, "parquet_file_lineage", one_row_short)
+    monkeypatch.setattr(manifest, "content_hash", counting_hash)
+    df = spark.range(0, 1000, numPartitions=3).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s")
+    dest = str(tmp_path / "mismatch")
+    rows, chash, _ = manifest.write_with_summary(df, dest)
+    assert recounts == [1], "the fallback read-back did not run"
+    assert (rows, chash) == content_hash(spark.read.parquet(dest)) == content_hash(df)
+
+
 def test_merge_upsert_semantics(spark):
     base = spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)], "id int, value double")
     upd = spark.createDataFrame([(2, 99.0), (4, 40.0)], "id int, value double")
